@@ -22,11 +22,8 @@ object Run {
           else r.nullCounts.toSeq.sortBy(_._1)
             .map { case (c, n) => s"$c=$n" }
             .mkString(" (null audit: ", ", ", ")")
-        // rows is None when the metrics listener timed out (Pipeline filters
-        // negative counts) — still a successful job, just an unknown count
-        val rowsTxt = r.rows.map(_.toString).getOrElse("unknown")
         println(s"[graft] ${r.job.source} -> ${r.job.target}: " +
-          s"$rowsTxt rows$audit")
+          s"${r.rows.get} rows$audit")
       }
       else
         println(s"[graft] ${r.job.source} -> ${r.job.target}: FAILED: ${r.error.get.getMessage}")

@@ -3,7 +3,7 @@ package graft.engine
 import java.time.{LocalDate, LocalDateTime, ZoneOffset}
 import java.time.format.DateTimeFormatter
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
@@ -179,24 +179,19 @@ object PgCopy {
   def lineCol(fields: Seq[Column]): Column =
     ColumnBridge.column(PgCopyLine(fields.map(ColumnBridge.expression)))
 
-  /** The whole frame as a single-column `copy_line` payload DataFrame. */
-  def copyLines(df: DataFrame): DataFrame =
-    df.select(lineCol(df.columns.toSeq.map(df.col)).as("copy_line"))
-
   /** The `COPY … FROM` command a DBA runs for one payload file — the
-    * pgcopy sink writes a manifest with one line per written part file.
+    * pgcopy sink writes a manifest with one line per payload file.
     */
   def copySql(table: String, columns: Seq[String],
               file: String = "payload.txt"): String =
     s"""\\COPY "$table" (${columns.map(c => s""""$c"""").mkString(", ")}) FROM '$file' WITH (FORMAT text)"""
 }
 
-/** Catalyst expression for the COPY line. Sink-boundary projection:
-  * `CodegenFallback` is deliberate — the expression sits directly under
-  * the text-file write (IO-bound), never inside an analytic hot path,
-  * and the fallback keeps the encoder as ONE audited JVM implementation
-  * shared with the byte-exactness specs instead of a second copy in
-  * generated-source form.
+/** Catalyst expression for the COPY line ([[PgCopy.encodeLine]] as SQL;
+  * the oracle-gated `q_pgcopy` projects it). `CodegenFallback` is
+  * deliberate — never inside an analytic hot path, and the fallback
+  * keeps the encoder ONE audited JVM implementation shared with the
+  * pgcopy sink and the byte-exactness specs.
   */
 case class PgCopyLine(children: Seq[Expression])
     extends Expression with CodegenFallback {

@@ -1,9 +1,10 @@
 package graft.engine
 
+import java.nio.charset.StandardCharsets.UTF_8
 import java.util
 
-import scala.jdk.CollectionConverters._
-
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
@@ -11,32 +12,36 @@ import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterF
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types.{DataType, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.spark.util.SerializableConfiguration
 
-/** `df.write.format("pgcopy")` — the Spark-native packaging of the
-  * reference's bulk COPY sink (GCS2Postgres `src/db/db.go:175-180`,
-  * `pgx.CopyFrom`) as a DataSourceV2 `TableProvider`, so the COPY TEXT
-  * payload path needs no facade call: registered via
-  * `DataSourceRegister` (META-INF/services), byte-identical payloads to
-  * [[Sink]]'s `pgcopy` case because both delegate every field to the
-  * ONE audited encoder ([[PgCopy]]).
+/** `df.write.format("pgcopy")` — the engine's one writer of the
+  * reference's bulk COPY landing (GCS2Postgres `src/db/db.go:175-180`,
+  * `pgx.CopyFrom`) as a DataSourceV2 `TableProvider`, registered via
+  * `DataSourceRegister` (META-INF/services); [[Sink]]'s `pgcopy` case
+  * routes here, and every field goes through [[PgCopy]]'s encoder.
   *
-  * Layout contract (same as the facade): `path` is the payload
-  * directory; each partition writes one `part-*.txt` COPY TEXT file,
-  * and commit writes `<path>.copy.sql` next to the directory with one
-  * `\COPY` command per file actually committed. `option("table", t)`
-  * names the target table in the manifest (default: the path's last
-  * segment).
+  * Layout contract: `path` is the payload directory with one
+  * `part-*.txt` COPY TEXT file per partition; `<path>.copy.sql` beside
+  * it holds one `\COPY` command per payload file. `option("table", t)`
+  * names the target table (default: the path's last segment).
   *
-  * Scale shape: encoding stays a narrow per-row projection inside each
-  * task (no shuffle, no driver materialization — unlike the reference,
-  * which buffers all rows driver-side, db.go:151-155); sink parallelism
-  * is the upstream partition count. Task retries are safe: file names
-  * embed the task id, the commit coordinator admits one attempt per
-  * partition, and losing attempts delete their file in `abort()`.
+  * Landing is all-or-nothing, like the reference's single COPY
+  * transaction: tasks write into a hidden sibling staging directory,
+  * and only the driver's `commit` moves the payload into place —
+  * `overwrite` swaps the staged directory in, `append` moves the
+  * committed files in and extends the prior manifest with exactly
+  * those files (commit messages, never a directory listing). A failed
+  * write deletes only its staging directory.
   *
-  * Write-only: `mode("append")` adds part files, `mode("overwrite")`
-  * truncates the directory first ([[TableCapability.TRUNCATE]]); reads
-  * are rejected (the payload is for `psql \COPY`, not for Spark).
+  * Scale shape: encoding is a narrow per-row step inside each task (no
+  * shuffle, no driver materialization — unlike the reference, which
+  * buffers all rows driver-side, db.go:151-155). Task retries are safe:
+  * file names embed the query id and task id, and losing attempts
+  * delete their file in `abort()`. Paths resolve through the session's
+  * Hadoop configuration, captured on the driver and shipped to tasks.
+  *
+  * Write-only, `mode("append")` or `mode("overwrite")`
+  * ([[TableCapability.TRUNCATE]]); reads are rejected.
   */
 class PgCopySource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "pgcopy"
@@ -67,88 +72,96 @@ private class PgCopyTable(path: String, table: String, schema: StructType)
     util.EnumSet.of(TableCapability.BATCH_WRITE, TableCapability.TRUNCATE)
 
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder = {
-    // the facade's type gate, enforced at plan time: struct/map have no
-    // scalar Postgres analogue (reference converter is scalar-only,
+    // the type gate, enforced at plan time: struct/map have no scalar
+    // Postgres analogue (reference converter is scalar-only,
     // utils.go:135-166)
     val bad = info.schema().fields.filterNot(f => PgCopy.supported(f.dataType))
     if (bad.nonEmpty) throw new IllegalArgumentException(
       s"pgcopy: unsupported field type(s) ${bad.map(f => s"${f.name}: ${f.dataType.sql}").mkString(", ")} — flatten upstream")
-    new PgCopyWriteBuilder(path, table, info.schema())
-  }
-}
-
-private class PgCopyWriteBuilder(path: String, table: String,
-                                 schema: StructType)
-    extends WriteBuilder with SupportsTruncate {
-  private var doTruncate = false
-  override def truncate(): WriteBuilder = { doTruncate = true; this }
-  override def build(): Write = new Write {
-    override def toBatch: BatchWrite =
-      new PgCopyBatchWrite(path, table, schema, doTruncate)
+    new WriteBuilder with SupportsTruncate {
+      private var overwrite = false
+      override def truncate(): WriteBuilder = { overwrite = true; this }
+      override def build(): Write = new Write {
+        override def toBatch: BatchWrite = new PgCopyBatchWrite(path, table,
+          info.schema(), info.queryId(), overwrite, new SerializableConfiguration(
+            SparkSession.active.sessionState.newHadoopConf()))
+      }
+    }
   }
 }
 
 private case class PgCopyCommit(fileName: String) extends WriterCommitMessage
 
 private class PgCopyBatchWrite(path: String, table: String,
-                               schema: StructType, doTruncate: Boolean)
+                               schema: StructType, writeId: String,
+                               overwrite: Boolean, conf: SerializableConfiguration)
     extends BatchWrite {
+  private val fs: FileSystem = new Path(path).getFileSystem(conf.value)
+  private val dir = fs.makeQualified(new Path(path.stripSuffix("/")))
+  // hidden sibling: Spark's file readers and any `part-*` listing of
+  // the payload directory skip it
+  private val staging = new Path(dir.getParent, s".${dir.getName}.pgcopy-$writeId")
+  private val manifest = new Path(dir.getParent, s"${dir.getName}.copy.sql")
 
   override def createBatchWriterFactory(
       info: PhysicalWriteInfo): DataWriterFactory = {
-    // driver-side, before any task launches: overwrite clears prior
-    // payload files so a re-run never mixes generations
-    val dir = new org.apache.hadoop.fs.Path(path)
-    val fs = dir.getFileSystem(new org.apache.hadoop.conf.Configuration())
-    if (doTruncate && fs.exists(dir)) fs.delete(dir, true)
-    fs.mkdirs(dir)
-    new PgCopyWriterFactory(path, schema.fields.map(_.dataType))
+    fs.mkdirs(staging)
+    new PgCopyWriterFactory(staging.toString, writeId,
+      schema.fields.map(_.dataType), conf)
   }
+
+  private def rename(from: Path, to: Path): Unit =
+    if (!fs.rename(from, to))
+      throw new java.io.IOException(s"pgcopy: commit rename $from -> $to failed")
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    // one \COPY line per COMMITTED part file (commit messages, not a
-    // directory listing — a concurrent writer's files are not ours to
-    // manifest); sorted for a deterministic, diffable manifest
-    val parts = messages.collect { case PgCopyCommit(f) => f }.sorted
-    val sql = parts.map(f =>
-      PgCopy.copySql(table, schema.fields.map(_.name).toSeq, s"$table/$f"))
-      .mkString("", "\n", "\n")
-    val manifest = new org.apache.hadoop.fs.Path(
-      path.stripSuffix("/") + ".copy.sql")
-    val fs = manifest.getFileSystem(new org.apache.hadoop.conf.Configuration())
+    // sorted for a deterministic, diffable manifest
+    val files = messages.collect { case PgCopyCommit(f) => f }.sorted
+    val prior =
+      if (overwrite || !fs.exists(manifest)) Nil
+      else {
+        val in = fs.open(manifest)
+        try new String(in.readAllBytes(), UTF_8).split('\n').toSeq.filter(_.nonEmpty)
+        finally in.close()
+      }
+    if (overwrite) {
+      fs.delete(dir, true)
+      rename(staging, dir)
+    } else {
+      fs.mkdirs(dir)
+      files.foreach(f => rename(new Path(staging, f), new Path(dir, f)))
+      fs.delete(staging, true)
+    }
+    val cols = schema.fieldNames.toSeq
+    val sql = (prior ++ files.map(f =>
+      PgCopy.copySql(table, cols, s"${dir.getName}/$f"))).mkString("", "\n", "\n")
     val out = fs.create(manifest, true)
-    try out.write(sql.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
+    try out.write(sql.getBytes(UTF_8)) finally out.close()
   }
 
-  override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(new org.apache.hadoop.conf.Configuration())
-    messages.collect { case PgCopyCommit(f) =>
-      fs.delete(new org.apache.hadoop.fs.Path(s"$path/$f"), false)
-    }
-  }
+  override def abort(messages: Array[WriterCommitMessage]): Unit =
+    fs.delete(staging, true)
 }
 
-private class PgCopyWriterFactory(path: String, types: Array[DataType])
+private class PgCopyWriterFactory(dir: String, writeId: String,
+                                  types: Array[DataType],
+                                  conf: SerializableConfiguration)
     extends DataWriterFactory {
   override def createWriter(partitionId: Int,
                             taskId: Long): DataWriter[InternalRow] =
-    new PgCopyDataWriter(path, types, partitionId, taskId)
+    new PgCopyDataWriter(
+      new Path(dir, f"part-$partitionId%05d-$writeId-$taskId.txt"), types, conf)
 }
 
 /** Per-task COPY TEXT writer: streams encoded lines straight to the
-  * part file (never buffers the partition), UTF-8, `\n` row
+  * staged part file (never buffers the partition), UTF-8, `\n` row
   * terminator per the COPY spec.
   */
-private class PgCopyDataWriter(path: String, types: Array[DataType],
-                               partitionId: Int, taskId: Long)
+private class PgCopyDataWriter(file: Path, types: Array[DataType],
+                               conf: SerializableConfiguration)
     extends DataWriter[InternalRow] {
-  private val fileName = f"part-$partitionId%05d-$taskId.txt"
-  private val fs = new org.apache.hadoop.fs.Path(path)
-    .getFileSystem(new org.apache.hadoop.conf.Configuration())
-  private val out = fs.create(
-    new org.apache.hadoop.fs.Path(s"$path/$fileName"), true)
+  private val fs = file.getFileSystem(conf.value)
+  private val out = fs.create(file, true)
   private var closed = false
 
   override def write(record: InternalRow): Unit = {
@@ -158,18 +171,17 @@ private class PgCopyDataWriter(path: String, types: Array[DataType],
       values(i) = if (record.isNullAt(i)) null else record.get(i, types(i))
       i += 1
     }
-    out.write((PgCopy.encodeLine(values, types) + "\n")
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    out.write((PgCopy.encodeLine(values, types) + "\n").getBytes(UTF_8))
   }
 
   override def commit(): WriterCommitMessage = {
     close()
-    PgCopyCommit(fileName)
+    PgCopyCommit(file.getName)
   }
 
   override def abort(): Unit = {
     close()
-    fs.delete(new org.apache.hadoop.fs.Path(s"$path/$fileName"), false)
+    fs.delete(file, false)
   }
 
   override def close(): Unit =

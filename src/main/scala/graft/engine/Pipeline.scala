@@ -1,7 +1,7 @@
 package graft.engine
 
 import scala.util.{Failure, Success, Try}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 
 /** Pipeline orchestrator — the engine's `TransferData` (GCS2Postgres
   * `src/db/db.go:188-220`). Differences by design:
@@ -17,6 +17,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object Pipeline {
 
+  /** `rows` is the exact landed count, `None` only when `error` is set. */
   final case class JobResult(job: JobSpec, rows: Option[Long],
                              error: Option[Throwable],
                              nullCounts: Map[String, Long] = Map.empty) {
@@ -25,54 +26,35 @@ object Pipeline {
 
   /** Run one job: read → align to target schema (when declared) → sink.
     * Returns row count written (the reference logs `copyCount`, db.go:184)
-    * plus a per-column null census. Both come from `observe` metrics
-    * captured by a listener on the write's own QueryExecution — ONE pass
-    * over the data; at 100 TB a separate data-quality scan would double
-    * the ingest cost, observe() rides the sink job for free.
+    * plus a per-column null census. Both come from an `Observation` on
+    * the frame the sink writes — ONE pass over the data; at 100 TB a
+    * separate data-quality scan would double the ingest cost. The
+    * observation is private to this call (concurrent jobs never mix),
+    * and is read only after `Sink.write` returns, so a failed write never
+    * waits; a sink that skipped the write completes it empty: 0 rows.
     */
   def runJob(spark: SparkSession, job: JobSpec,
              sink: SinkConfig): (Long, Map[String, Long]) = {
     import org.apache.spark.sql.functions.{col, count, lit, sum, when}
     val src = Readers.read(spark, job)
     val aligned = job.targetSchema.map(SchemaAlign.align(src, _)).getOrElse(src)
-    val metricName = s"graft_sink_${job.target}"
     val auditCols = aligned.columns.toSeq.map(c =>
       sum(when(col(c).isNull, 1L).otherwise(0L)).as(s"nulls_$c"))
-    val observed = aligned.observe(metricName,
-      count(lit(1)).as("rows"), auditCols: _*)
-    @volatile var captured: Option[org.apache.spark.sql.Row] = None
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          durationNs: Long): Unit =
-        qe.observedMetrics.get(metricName)
-          .foreach(row => captured = Some(row))
-      override def onFailure(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          exception: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
-    try {
-      Sink.write(observed, job.target, sink)
-      // Listener delivery is asynchronous off the event bus.
-      val deadline = System.nanoTime() + 10e9.toLong
-      while (captured.isEmpty && System.nanoTime() < deadline) Thread.sleep(20)
-      captured.map { row =>
-        val nulls = aligned.columns.toSeq.map(c =>
-          c -> row.getAs[Long](s"nulls_$c")).filter(_._2 > 0).toMap
-        (row.getAs[Long]("rows"), nulls)
-      }.getOrElse((-1L, Map.empty[String, Long]))
-    } finally spark.listenerManager.unregister(listener)
+    val observation = Observation()
+    Sink.write(aligned.observe(observation, count(lit(1)).as("rows"),
+      auditCols: _*), job.target, sink)
+    // a null sum (no rows) unboxes to 0 like a missing metric
+    val metrics = observation.get.withDefaultValue(0L)
+    val nulls = aligned.columns.toSeq.map(c =>
+      c -> metrics(s"nulls_$c").asInstanceOf[Long]).filter(_._2 > 0).toMap
+    (metrics("rows").asInstanceOf[Long], nulls)
   }
 
   def run(spark: SparkSession, config: EngineConfig,
           parallelism: Int = 1): Seq[JobResult] = {
     def one(job: JobSpec): JobResult =
       Try(runJob(spark, job, config.sink)) match {
-        // a metrics-listener timeout reports rows = -1: surface that as
-        // "unknown" (None), never as a believable count
-        case Success((n, nulls)) =>
-          JobResult(job, Some(n).filter(_ >= 0), None, nulls)
+        case Success((n, nulls)) => JobResult(job, Some(n), None, nulls)
         case Failure(e) => JobResult(job, None, Some(e))
       }
     if (parallelism <= 1) config.jobs.map(one)

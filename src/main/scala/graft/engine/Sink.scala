@@ -9,6 +9,9 @@ import org.apache.spark.sql.DataFrame
   * PER PARTITION and streams `batchsize`-row batches — the shape that
   * survives 100 TB: sink parallelism scales with partition count and no
   * executor ever materializes more than its partition.
+  *
+  * Every case is a Spark write of `df` itself, so an `Observation` on
+  * `df` ([[Pipeline.runJob]]'s counts) completes with the write.
   */
 object Sink {
 
@@ -70,47 +73,24 @@ object Sink {
               "append — refusing (drop the table directory to rebuild, " +
               "or use deleteWhere/upsertTable for row-level changes)")
         }
-      case "avro" =>
-        // interchange landing in Avro container files via the in-repo
-        // DSv2 (sources/AvroSource): one deflate-coded file per
-        // partition, splittable on sync markers for whoever reads it
-        // next. DSv2 has no catalog here, so the mode must be
-        // append/overwrite — same rule as any path-based V2 sink.
-        val root = cfg.path.getOrElse(
-          throw new IllegalArgumentException("avro sink needs sink.path"))
-        // DSv2 path sinks support only append/overwrite; anything else
-        // (error/errorifexists/ignore) must fail loudly here — silently
-        // coercing to overwrite would truncate data the job spec asked
-        // us to protect
+      case "avro" | "pgcopy" =>
+        // path-based DSv2 landings. avro (sources/AvroSource): one
+        // deflate-coded container file per partition, splittable on sync
+        // markers for whoever reads it next. pgcopy (PgCopySource): the
+        // reference's landing step (db.go:175-180, pgx.CopyFrom) as one
+        // COPY TEXT file per partition plus a `<target>.copy.sql`
+        // manifest of `\COPY` commands, landed all-or-nothing at commit;
+        // loading needs only psql, one invocation per file.
+        val root = cfg.path.getOrElse(throw new IllegalArgumentException(
+          s"${cfg.format} sink needs sink.path"))
+        // DSv2 path sinks have no catalog, so only append/overwrite;
+        // anything else (error/errorifexists/ignore) must fail loudly
+        // before writing — silently coercing to overwrite would truncate
+        // data the job spec asked us to protect
         require(cfg.mode == "append" || cfg.mode == "overwrite",
-          s"avro sink supports mode append/overwrite, got '${cfg.mode}'")
-        df.write.mode(cfg.mode).format("graft-avro").save(s"$root/$target")
-      case "pgcopy" =>
-        // The reference's landing step (db.go:175-180, pgx.CopyFrom)
-        // re-expressed as payload files: one COPY TEXT file per upstream
-        // partition plus a `<target>.copy.sql` manifest with the exact
-        // `\COPY` command. No pg driver needed to produce or verify the
-        // payload; loading is one psql invocation per file (parallel
-        // COPY is the documented fast path for bulk Postgres loads).
-        val root = cfg.path.getOrElse(
-          throw new IllegalArgumentException("pgcopy sink needs sink.path"))
-        PgCopy.copyLines(df).write.mode(cfg.mode).text(s"$root/$target")
-        val dir = new org.apache.hadoop.fs.Path(s"$root/$target")
-        val fs = dir.getFileSystem(
-          df.sparkSession.sessionState.newHadoopConf())
-        // one \COPY line per part file Spark actually wrote (names are
-        // Spark-assigned, so the manifest is built from a directory
-        // listing, not a guessed constant); files load in parallel, one
-        // psql invocation per line
-        val parts = fs.listStatus(dir).map(_.getPath.getName)
-          .filter(_.startsWith("part-")).sorted
-        val sql = parts.map(f =>
-          PgCopy.copySql(target, df.columns.toSeq, s"$target/$f"))
-          .mkString("", "\n", "\n")
-        val manifest = new org.apache.hadoop.fs.Path(s"$root/$target.copy.sql")
-        val out = fs.create(manifest, true)
-        try out.write(sql.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        finally out.close()
+          s"${cfg.format} sink supports mode append/overwrite, got '${cfg.mode}'")
+        df.write.format(if (cfg.format == "avro") "graft-avro" else "pgcopy")
+          .mode(cfg.mode).option("table", target).save(s"$root/$target")
       case "jdbc" =>
         // Production wiring (driver jar absent in this environment):
         // one connection per partition, batched inserts. `numPartitions`

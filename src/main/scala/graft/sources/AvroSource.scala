@@ -10,6 +10,7 @@ import org.apache.avro.generic.{GenericDatumReader, GenericDatumWriter, GenericR
 import org.apache.avro.mapred.FsInput
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, Path => HPath}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
@@ -19,6 +20,7 @@ import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterF
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.spark.util.SerializableConfiguration
 
 /** `spark.read.format("graft-avro")` / `df.write.format("graft-avro")`
   * — Avro container-file ingestion and landing as a DataSource V2,
@@ -51,6 +53,9 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * default ErrorIfExists onto catalogs, which this path-based source
   * doesn't have.
   *
+  * Paths resolve through the session's Hadoop configuration, captured
+  * once per provider lookup on the driver and shipped to tasks.
+  *
   * Types covered (both directions) are [[AvroConv]]'s scope:
   * primitives, `[null,T]` unions, records, arrays, string-keyed maps,
   * `date`/`timestamp-micros`/`timestamp-millis`/`decimal` logicals.
@@ -59,13 +64,16 @@ class AvroSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "graft-avro"
   override def supportsExternalMetadata(): Boolean = true
 
+  private lazy val conf = new SerializableConfiguration(
+    SparkSession.active.sessionState.newHadoopConf())
+
   override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
     val path = Option(options.get("path")).getOrElse(
       throw new IllegalArgumentException("graft-avro needs a path"))
-    val files = AvroSource.listAvroFiles(path)
+    val files = AvroSource.listAvroFiles(path, conf.value)
     if (files.isEmpty)
       throw new IllegalArgumentException(s"graft-avro: no .avro files under $path")
-    AvroConv.toStructType(AvroSource.writerSchemaOf(files.head.getPath))
+    AvroConv.toStructType(AvroSource.writerSchemaOf(files.head.getPath, conf.value))
   }
 
   override def getTable(schema: StructType, partitioning: Array[Transform],
@@ -74,14 +82,12 @@ class AvroSource extends TableProvider with DataSourceRegister {
       throw new IllegalArgumentException("graft-avro needs a path"))
     val splitSize = Option(properties.get("splitSize"))
       .map(_.toLong).getOrElse(128L * 1024 * 1024)
-    new AvroTable(path, schema, splitSize)
+    new AvroTable(path, schema, splitSize, conf)
   }
 }
 
 private[sources] object AvroSource {
-  private def hconf = new Configuration()
-
-  def listAvroFiles(path: String): Seq[FileStatus] = {
+  def listAvroFiles(path: String, hconf: Configuration): Seq[FileStatus] = {
     val p = new HPath(path)
     val fs = p.getFileSystem(hconf)
     if (!fs.exists(p)) return Seq.empty
@@ -93,7 +99,7 @@ private[sources] object AvroSource {
       .sortBy(_.getPath.getName)
   }
 
-  def writerSchemaOf(file: HPath): Schema = {
+  def writerSchemaOf(file: HPath, hconf: Configuration): Schema = {
     val in = new FsInput(file, hconf)
     val r = new DataFileReader[GenericRecord](in, new GenericDatumReader[GenericRecord]())
     try r.getSchema finally { r.close() }
@@ -115,7 +121,8 @@ private[sources] object AvroSource {
   }
 }
 
-private class AvroTable(path: String, tblSchema: StructType, splitSize: Long)
+private class AvroTable(path: String, tblSchema: StructType, splitSize: Long,
+                        conf: SerializableConfiguration)
     extends Table with SupportsRead with SupportsWrite {
   override def name(): String = s"graft-avro:$path"
   override def schema(): StructType = tblSchema
@@ -124,12 +131,12 @@ private class AvroTable(path: String, tblSchema: StructType, splitSize: Long)
       TableCapability.TRUNCATE)
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new AvroScanBuilder(path, tblSchema, splitSize)
+    new AvroScanBuilder(path, tblSchema, splitSize, conf)
 
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder = {
     // fail at plan time if any column has no Avro mapping
     AvroConv.toAvroRecord(info.schema(), "graft_row")
-    new AvroWriteBuilder(path, info.schema())
+    new AvroWriteBuilder(path, info.schema(), conf)
   }
 }
 
@@ -137,18 +144,20 @@ private class AvroTable(path: String, tblSchema: StructType, splitSize: Long)
 // read
 // -----------------------------------------------------------------
 
-private class AvroScanBuilder(path: String, full: StructType, splitSize: Long)
+private class AvroScanBuilder(path: String, full: StructType, splitSize: Long,
+                              conf: SerializableConfiguration)
     extends ScanBuilder with SupportsPushDownRequiredColumns {
   private var required: StructType = full
   override def pruneColumns(requiredSchema: StructType): Unit =
     required = requiredSchema
-  override def build(): Scan = new AvroScan(path, required, splitSize)
+  override def build(): Scan = new AvroScan(path, required, splitSize, conf)
 }
 
 private case class AvroRange(file: String, start: Long, end: Long)
     extends InputPartition
 
-private class AvroScan(path: String, required: StructType, splitSize: Long)
+private class AvroScan(path: String, required: StructType, splitSize: Long,
+                       conf: SerializableConfiguration)
     extends Scan with Batch {
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
@@ -156,7 +165,7 @@ private class AvroScan(path: String, required: StructType, splitSize: Long)
     s"graft-avro $path ReadSchema: ${required.catalogString}"
 
   override def planInputPartitions(): Array[InputPartition] =
-    AvroSource.listAvroFiles(path).flatMap { f =>
+    AvroSource.listAvroFiles(path, conf.value).flatMap { f =>
       val len = f.getLen
       val n = math.max(1L, (len + splitSize - 1) / splitSize)
       (0L until n).map { i =>
@@ -166,13 +175,14 @@ private class AvroScan(path: String, required: StructType, splitSize: Long)
     }.toArray
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new AvroReaderFactory(required)
+    new AvroReaderFactory(required, conf)
 }
 
-private class AvroReaderFactory(required: StructType)
+private class AvroReaderFactory(required: StructType,
+                                conf: SerializableConfiguration)
     extends PartitionReaderFactory {
   override def createReader(p: InputPartition): PartitionReader[InternalRow] =
-    new AvroRangeReader(p.asInstanceOf[AvroRange], required)
+    new AvroRangeReader(p.asInstanceOf[AvroRange], required, conf.value)
 }
 
 /** Reads the records whose block's sync point falls in `[start, end)`.
@@ -181,9 +191,9 @@ private class AvroReaderFactory(required: StructType)
   * the reader has crossed `end`, at which point the NEXT range owns
   * the remaining blocks.
   */
-private class AvroRangeReader(range: AvroRange, required: StructType)
+private class AvroRangeReader(range: AvroRange, required: StructType,
+                              conf: Configuration)
     extends PartitionReader[InternalRow] {
-  private val conf = new Configuration()
   private val datumReader = new GenericDatumReader[GenericRecord]()
   private val fileReader = new DataFileReader[GenericRecord](
     new FsInput(new HPath(range.file), conf), datumReader)
@@ -230,42 +240,44 @@ private class AvroRangeReader(range: AvroRange, required: StructType)
 // write
 // -----------------------------------------------------------------
 
-private class AvroWriteBuilder(path: String, schema: StructType)
+private class AvroWriteBuilder(path: String, schema: StructType,
+                               conf: SerializableConfiguration)
     extends WriteBuilder with SupportsTruncate {
   private var doTruncate = false
   override def truncate(): WriteBuilder = { doTruncate = true; this }
   override def build(): Write = new Write {
     override def toBatch: BatchWrite =
-      new AvroBatchWrite(path, schema, doTruncate)
+      new AvroBatchWrite(path, schema, doTruncate, conf)
   }
 }
 
 private case class AvroCommit(fileName: String) extends WriterCommitMessage
 
 private class AvroBatchWrite(path: String, schema: StructType,
-                             doTruncate: Boolean) extends BatchWrite {
+                             doTruncate: Boolean,
+                             conf: SerializableConfiguration) extends BatchWrite {
+  private def fs = new HPath(path).getFileSystem(conf.value)
   override def createBatchWriterFactory(
       info: PhysicalWriteInfo): DataWriterFactory = {
     val dir = new HPath(path)
-    val fs = dir.getFileSystem(new Configuration())
     if (doTruncate && fs.exists(dir)) fs.delete(dir, true)
     fs.mkdirs(dir)
-    new AvroWriterFactory(path, schema)
+    new AvroWriterFactory(path, schema, conf)
   }
   override def commit(messages: Array[WriterCommitMessage]): Unit = ()
   override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val fs = new HPath(path).getFileSystem(new Configuration())
     messages.collect { case AvroCommit(f) =>
       fs.delete(new HPath(s"$path/$f"), false)
     }
   }
 }
 
-private class AvroWriterFactory(path: String, schema: StructType)
+private class AvroWriterFactory(path: String, schema: StructType,
+                                conf: SerializableConfiguration)
     extends DataWriterFactory {
   override def createWriter(partitionId: Int,
                             taskId: Long): DataWriter[InternalRow] =
-    new AvroDataWriter(path, schema, partitionId, taskId)
+    new AvroDataWriter(path, schema, partitionId, taskId, conf.value)
 }
 
 /** Per-task container-file writer: streams records block-by-block
@@ -282,13 +294,14 @@ private class AvroWriterFactory(path: String, schema: StructType)
   * beside the retry's file).
   */
 private class AvroDataWriter(path: String, schema: StructType,
-                             partitionId: Int, taskId: Long)
+                             partitionId: Int, taskId: Long,
+                             conf: Configuration)
     extends DataWriter[InternalRow] {
   private val fileName = f"part-$partitionId%05d-$taskId.avro"
   private val tmpName = s"$fileName.tmp"
   private val avroSchema = AvroConv.toAvroRecord(schema, "graft_row")
   private val rowConv = AvroConv.writer(schema, avroSchema)
-  private val fs = new HPath(path).getFileSystem(new Configuration())
+  private val fs = new HPath(path).getFileSystem(conf)
   private val out = fs.create(new HPath(s"$path/$tmpName"), true)
   private val writer =
     new DataFileWriter[GenericRecord](new GenericDatumWriter[GenericRecord](avroSchema))

@@ -88,7 +88,7 @@ class PgCopySpec extends SparkSpec {
     val df = Seq((1L, "a")).toDF("id", "s")
       .select(struct(col("id"), col("s")).as("st"))
     val e = intercept[Exception] {
-      PgCopy.copyLines(df).collect()
+      df.select(PgCopy.lineCol(Seq(col("st")))).collect()
     }
     assert(e.getMessage.contains("pg_copy_line"))
   }

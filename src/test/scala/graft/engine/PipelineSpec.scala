@@ -1,8 +1,14 @@
 package graft.engine
 
+import org.scalatest.concurrent.{Signaler, ThreadSignaler, TimeLimits}
+import org.scalatest.time.SpanSugar._
+
 import graft.SparkSpec
 
-class PipelineSpec extends SparkSpec {
+class PipelineSpec extends SparkSpec with TimeLimits {
+  // interrupt a stuck test thread (e.g. blocked on an Observation that
+  // never completes) instead of only reporting the overrun afterwards
+  implicit val signaler: Signaler = ThreadSignaler
 
   test("end-to-end job: read -> align -> parquet sink, rows counted") {
     val out = java.nio.file.Files.createTempDirectory("graft_sink").toString
@@ -59,6 +65,63 @@ class PipelineSpec extends SparkSpec {
     val results = Pipeline.run(spark, cfg, parallelism = 3)
     assert(results.forall(_.ok))
     assert(results.map(_.rows.get).sorted == Seq(5L, 10L, 25L, 150L))
+  }
+
+  test("concurrent jobs on one target each report their own row count " +
+       "and null census") {
+    val bigRows = spark.read.parquet(sf() + "/orders.parquet").count()
+    val cfg = EngineConfig(
+      jobs = Seq(
+        JobSpec(source = sf() + "/region.parquet", target = "same",
+          targetSchemaDdl = Some("r_regionkey INT, absent DOUBLE")),
+        JobSpec(source = sf() + "/orders.parquet", target = "same",
+          targetSchemaDdl = Some("o_orderkey BIGINT, absent DOUBLE"))),
+      sink = SinkConfig(format = "noop"))
+    for (_ <- 1 to 5) {
+      val Seq(small, big) = Pipeline.run(spark, cfg, parallelism = 2)
+      assert(small.rows.contains(5L), small)
+      assert(small.nullCounts == Map("absent" -> 5L), small)
+      assert(big.rows.contains(bigRows), big)
+      assert(big.nullCounts == Map("absent" -> bigRows), big)
+    }
+  }
+
+  test("row-count law: every sink reports the exact source row count and " +
+       "null census") {
+    import org.apache.spark.sql.functions.{col, lit, when}
+    val tmp = java.nio.file.Files.createTempDirectory("graft_rowlaw").toString
+    val n = 1000
+    spark.range(0, n, 1, 3).select(col("id"), (col("id") % 4).cast("int").as("g"),
+        when(col("id") % 7 === 0, lit(null)).otherwise(col("id")).as("v"),
+        when(col("id") % 3 === 0, lit(null))
+          .otherwise(col("id").cast("string")).as("s"))
+      .write.parquet(s"$tmp/src")
+    val census = Map("v" -> (0 until n).count(_ % 7 == 0).toLong,
+      "s" -> (0 until n).count(_ % 3 == 0).toLong, "absent" -> n.toLong)
+    val out = Some(s"$tmp/out")
+    GraftMemJdbc.register()
+    GraftMemJdbc.reset()
+    val sinks = Seq(
+      "parquet" -> SinkConfig(format = "parquet", path = out, mode = "overwrite"),
+      "bucketed" -> SinkConfig(format = "parquet", mode = "overwrite",
+        bucketBy = Seq("id"), numBuckets = 4),
+      "iceberg" -> SinkConfig(format = "iceberg", path = out,
+        partitionBy = Seq("g")),
+      "avro" -> SinkConfig(format = "avro", path = out, mode = "overwrite"),
+      "pgcopy" -> SinkConfig(format = "pgcopy", path = out, mode = "overwrite"),
+      "jdbc" -> SinkConfig(format = "jdbc", url = Some("jdbc:graft:mem")),
+      "noop" -> SinkConfig(format = "noop"))
+    for ((name, sink) <- sinks) failAfter(120.seconds) {
+      val r = Pipeline.run(spark, EngineConfig(Seq(JobSpec(
+        source = s"$tmp/src", target = s"rowlaw_$name",
+        format = Some(SourceFormat.Parquet),
+        targetSchemaDdl = Some("id BIGINT, g INT, v BIGINT, s STRING, absent DOUBLE"))),
+        sink)).head
+      assert(r.error.isEmpty, s"$name: ${r.error}")
+      assert(r.rows.contains(n.toLong), name)
+      assert(r.nullCounts == census, name)
+    }
+    assert(GraftMemJdbc.insertedRows.size == n)
   }
 
   test("Spread lifts under-split inputs and passes through the rest") {

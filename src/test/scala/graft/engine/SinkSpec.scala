@@ -1,5 +1,7 @@
 package graft.engine
 
+import org.apache.spark.sql.functions.{col, lit}
+
 import graft.SparkSpec
 
 /** Executes `Sink.write`'s jdbc branch against the in-memory driver
@@ -59,7 +61,8 @@ class SinkSpec extends SparkSpec {
       .toSeq
 
   test("pgcopy DataSourceV2: df.write.format(\"pgcopy\") produces " +
-       "byte-identical payload lines to the Sink facade, plus a manifest") {
+       "byte-identical payload lines to the PgCopy.lineCol projection, " +
+       "plus a manifest") {
     val tmp = java.nio.file.Files.createTempDirectory("pgcopy_dsv2").toFile
     val df = Seq(
       (1L, "plain", Some(3.5), "2024-03-01 10:20:30"),
@@ -68,16 +71,15 @@ class SinkSpec extends SparkSpec {
       .toDF("id", "txt", "score", "ts")
       .selectExpr("id", "txt", "score", "CAST(ts AS TIMESTAMP) AS ts")
       .repartition(2)
-    // facade path (the oracle-gated q_pgcopy encoder)
-    Sink.write(df, "t_fac", SinkConfig(format = "pgcopy",
-      path = Some(tmp.getAbsolutePath)))
+    // the oracle-gated q_pgcopy encoder, as a SQL projection
+    val projected = df.select(PgCopy.lineCol(df.columns.toSeq.map(df.col)))
+      .as[String].collect().toSeq.sorted
     // DataSourceV2 path, resolved by short name via DataSourceRegister
     df.write.format("pgcopy").mode("append")
-      .option("table", "t_fac")
+      .option("table", "t_tab")
       .option("path", s"${tmp.getAbsolutePath}/t_dsv2").save()
-    val fac = readLines(new java.io.File(tmp, "t_fac")).sorted
     val v2 = readLines(new java.io.File(tmp, "t_dsv2")).sorted
-    assert(fac.nonEmpty && fac == v2) // byte-identical payload lines
+    assert(projected.size == 3 && v2 == projected) // byte-identical lines
     // manifest exists with one \COPY per part file, naming the table
     val manifest = new java.io.File(tmp, "t_dsv2.copy.sql")
     assert(manifest.exists())
@@ -86,7 +88,7 @@ class SinkSpec extends SparkSpec {
     val nParts = new java.io.File(tmp, "t_dsv2").listFiles()
       .count(_.getName.startsWith("part-"))
     assert(mlines.size == nParts)
-    assert(mlines.forall(l => l.startsWith("\\COPY \"t_fac\"") &&
+    assert(mlines.forall(l => l.startsWith("\\COPY \"t_tab\"") &&
       l.contains("FORMAT text")))
   }
 
@@ -170,4 +172,124 @@ class SinkSpec extends SparkSpec {
     assert(spark.read.format("graft-avro").load(s"$root/nation")
       .count() === 25)
   }
+
+  /** Every visible file of a pgcopy landing — the payload directory's
+    * `part-*` files and the `.copy.sql` manifest — by name, as bytes.
+    */
+  private def landing(root: String, table: String): Map[String, Seq[Byte]] = {
+    def bytes(f: java.io.File) = java.nio.file.Files.readAllBytes(f.toPath).toSeq
+    val parts = Option(new java.io.File(root, table).listFiles()).toSeq.flatten
+      .filter(_.getName.startsWith("part-"))
+      .map(f => s"$table/${f.getName}" -> bytes(f))
+    val manifest = new java.io.File(root, s"$table.copy.sql")
+    (parts ++ Seq(manifest).filter(_.exists).map(f => f.getName -> bytes(f))).toMap
+  }
+
+  private def manifestFiles(root: String, table: String): Seq[String] =
+    scala.io.Source.fromFile(new java.io.File(root, s"$table.copy.sql"), "UTF-8")
+      .getLines().filter(_.nonEmpty).map(_.split("'")(1)).toSeq
+
+  test("pgcopy overwrite is atomic: a task failing mid-write leaves the " +
+       "old part files and manifest byte-identical, no new part visible") {
+    val root = java.nio.file.Files.createTempDirectory("pgcopy_atomic").toString
+    val cfg = SinkConfig(format = "pgcopy", path = Some(root), mode = "overwrite")
+    Sink.write(Seq((1L, "old"), (2L, "older")).toDF("id", "txt").repartition(2),
+      "t", cfg)
+    val before = landing(root, "t")
+    assert(before.keys.count(_.startsWith("t/part-")) == 2 &&
+      before.contains("t.copy.sql"))
+    // partition 2 holds ids 50..74: ten rows reach its part file before
+    // the UDF throws, and the other partitions may finish theirs
+    val boom = org.apache.spark.sql.functions.udf { (id: Long) =>
+      if (id == 60L) throw new IllegalStateException("injected fault")
+      id
+    }
+    val failing = spark.range(0, 100, 1, 4)
+      .select(boom(col("id")).as("id"), lit("new").as("txt"))
+    val e = intercept[Exception](Sink.write(failing, "t", cfg))
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("injected fault")))
+    assert(landing(root, "t") == before)
+    // a retried overwrite then lands the new generation whole
+    Sink.write(spark.range(0, 100, 1, 4).select(col("id"), lit("new").as("txt")),
+      "t", cfg)
+    val after = landing(root, "t")
+    assert(after.keySet.intersect(before.keySet) == Set("t.copy.sql"))
+    assert(readLines(new java.io.File(root, "t")).size == 100)
+    assert(manifestFiles(root, "t").sorted ==
+      after.keys.filter(_.startsWith("t/part-")).toSeq.sorted)
+  }
+
+  test("pgcopy append: the manifest keeps the prior manifest's files and " +
+       "adds exactly the files this write committed") {
+    val root = java.nio.file.Files.createTempDirectory("pgcopy_append").toString
+    val cfg = SinkConfig(format = "pgcopy", path = Some(root), mode = "append")
+    Sink.write(Seq((1L, "a"), (2L, "b")).toDF("id", "txt").repartition(2), "t", cfg)
+    val first = manifestFiles(root, "t")
+    assert(first.size == 2)
+    // a file the sink never committed is not the manifest's to list
+    java.nio.file.Files.write(java.nio.file.Paths.get(root, "t", "part-foreign.txt"),
+      "9\tz\n".getBytes("UTF-8"))
+    Sink.write(Seq((3L, "c"), (4L, "d"), (5L, "e")).toDF("id", "txt").repartition(3),
+      "t", cfg)
+    val second = manifestFiles(root, "t")
+    assert(second.take(2) == first)
+    val added = second.drop(2)
+    assert(added.size == 3 && added.intersect(first).isEmpty)
+    val parts = new java.io.File(root, "t").listFiles().map(_.getName)
+      .filter(n => n.startsWith("part-") && n != "part-foreign.txt")
+    assert(second.sorted == parts.map(p => s"t/$p").toSeq.sorted)
+    val listed = second.flatMap(f => scala.io.Source.fromFile(
+      new java.io.File(root, f), "UTF-8").getLines())
+    assert(listed.sorted == Seq("1\ta", "2\tb", "3\tc", "4\td", "5\te"))
+  }
+
+  test("pgcopy sink: unsupported modes fail before anything is written " +
+       "(error/errorifexists/ignore are not coerced)") {
+    val root = java.nio.file.Files.createTempDirectory("pgcopy_mode").toString
+    val nation = spark.read.parquet(sf() + "/nation.parquet")
+    Sink.write(nation, "nation", SinkConfig(format = "pgcopy",
+      path = Some(root), mode = "overwrite"))
+    val before = landing(root, "nation")
+    for (m <- Seq("error", "errorifexists", "ignore")) {
+      val e = intercept[IllegalArgumentException] {
+        Sink.write(nation.limit(1), "nation", SinkConfig(format = "pgcopy",
+          path = Some(root), mode = m))
+      }
+      assert(e.getMessage.contains(m))
+    }
+    assert(landing(root, "nation") == before)
+    assert(new java.io.File(root).list().forall(n => !n.startsWith(".nation.pgcopy")))
+  }
+
+  test("pgcopy and graft-avro resolve paths through the session's Hadoop " +
+       "configuration, on the driver and in tasks") {
+    val root = java.nio.file.Files.createTempDirectory("session_fs").toString
+    // the scheme exists only in the session conf; no filesystem cache
+    // entry outlives a lookup, so a bare Configuration cannot find it
+    spark.conf.set("fs.graftsess.impl", classOf[SessionOnlyFs].getName)
+    spark.conf.set("fs.graftsess.impl.disable.cache", "true")
+    try {
+      val df = Seq((1L, "a"), (2L, null), (3L, "c")).toDF("id", "txt")
+        .repartition(2)
+      df.write.format("pgcopy").mode("overwrite").save(s"graftsess://$root/t")
+      assert(readLines(new java.io.File(root, "t")).sorted ==
+        Seq("1\ta", "2\t\\N", "3\tc"))
+      assert(manifestFiles(root, "t").size == 2)
+      df.write.format("graft-avro").mode("overwrite").save(s"graftsess://$root/a")
+      val back = spark.read.format("graft-avro").load(s"graftsess://$root/a")
+      assert(back.orderBy("id").collect().toSeq == df.orderBy("id").collect().toSeq)
+    } finally {
+      spark.conf.unset("fs.graftsess.impl")
+      spark.conf.unset("fs.graftsess.impl.disable.cache")
+    }
+  }
+}
+
+/** The local filesystem under a scheme of its own (`graftsess:`), for
+  * registering only through a session's Hadoop configuration.
+  */
+class SessionOnlyFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getScheme: String = "graftsess"
+  override def getUri: java.net.URI = java.net.URI.create("graftsess:///")
 }
