@@ -2180,11 +2180,11 @@ object SparkEntry {
     //      production shape of the similarity surface (faiss train+add
     //      vs search). The index (centroids + cell-PARTITIONED
     //      assignments) is built once per session; the query LOADS it:
-    //      no quantizer training, no assignment pass in the query plan
-    //      (PlanShapeSpec-pinned), and cell probes prune the
-    //      partitioned scan. Results equal the inline path by
-    //      construction (shared search kernel) — shares
-    //      q_simsearch_ivf's oracle ----
+    //      the probe runs on the driver against the stored centroids
+    //      and one job scans only the probed cells' directories — no
+    //      quantizer training, no assignment pass (PlanShapeSpec-
+    //      pinned). Results equal the inline path by construction
+    //      (shared search kernel) — shares q_simsearch_ivf's oracle ----
     "q_simsearch_ivf_idx" -> ((s, dir) => {
       val path = annIndex("ivf16", dir)(p =>
         graft.operators.Similarity.buildIvfIndex(

@@ -3,7 +3,7 @@ package graft.engine
 import java.nio.charset.StandardCharsets.UTF_8
 import java.util
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsWrite, Table, TableCapability, TableProvider}
@@ -96,23 +96,17 @@ private class PgCopyBatchWrite(path: String, table: String,
                                schema: StructType, writeId: String,
                                overwrite: Boolean, conf: SerializableConfiguration)
     extends BatchWrite {
-  private val fs: FileSystem = new Path(path).getFileSystem(conf.value)
-  private val dir = fs.makeQualified(new Path(path.stripSuffix("/")))
-  // hidden sibling: Spark's file readers and any `part-*` listing of
-  // the payload directory skip it
-  private val staging = new Path(dir.getParent, s".${dir.getName}.pgcopy-$writeId")
+  private val staged = new StagedDir(path, writeId, "pgcopy", conf)
+  private val dir = staged.dir
+  private val fs = staged.fs
   private val manifest = new Path(dir.getParent, s"${dir.getName}.copy.sql")
 
   override def createBatchWriterFactory(
       info: PhysicalWriteInfo): DataWriterFactory = {
-    fs.mkdirs(staging)
-    new PgCopyWriterFactory(staging.toString, writeId,
+    staged.create()
+    new PgCopyWriterFactory(staged.staging.toString, writeId,
       schema.fields.map(_.dataType), conf)
   }
-
-  private def rename(from: Path, to: Path): Unit =
-    if (!fs.rename(from, to))
-      throw new java.io.IOException(s"pgcopy: commit rename $from -> $to failed")
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     // sorted for a deterministic, diffable manifest
@@ -124,14 +118,7 @@ private class PgCopyBatchWrite(path: String, table: String,
         try new String(in.readAllBytes(), UTF_8).split('\n').toSeq.filter(_.nonEmpty)
         finally in.close()
       }
-    if (overwrite) {
-      fs.delete(dir, true)
-      rename(staging, dir)
-    } else {
-      fs.mkdirs(dir)
-      files.foreach(f => rename(new Path(staging, f), new Path(dir, f)))
-      fs.delete(staging, true)
-    }
+    staged.land(overwrite, files.toSeq)
     val cols = schema.fieldNames.toSeq
     val sql = (prior ++ files.map(f =>
       PgCopy.copySql(table, cols, s"${dir.getName}/$f"))).mkString("", "\n", "\n")
@@ -140,7 +127,7 @@ private class PgCopyBatchWrite(path: String, table: String,
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit =
-    fs.delete(staging, true)
+    staged.abort()
 }
 
 private class PgCopyWriterFactory(dir: String, writeId: String,

@@ -1,10 +1,14 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.RelationBridge
+import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
 import graft.functions.VectorFunctions._
-import graft.plans.LongArrayDot
+import graft.plans.{LongArrayDot, TopKPairsBuffer}
 
 /** Approximate-nearest-neighbor search over embedding columns.
   *
@@ -120,14 +124,22 @@ object Similarity {
     * `nlist` lowest-vec_id corpus vectors (the index/search mechanics are
     * identical either way). Every corpus vector is assigned to its
     * nearest centroid by quantized dot; a query probes the `nprobe`
-    * nearest cells and ranks only vectors in those cells.
+    * nearest cells and ranks only vectors in those cells. The centroids
+    * are collected once and serve both the assignment (as a local
+    * frame) and the driver-side probe, so both see the same quantizer.
+    * Eager, like [[ivfTopKIndexed]]: see [[ivfSearch]].
     */
   def ivfTopK(queries: DataFrame, corpus: DataFrame, k: Int,
               nlist: Int = 16, nprobe: Int = 4,
               centroids: Option[DataFrame] = None): DataFrame = {
-    val cents = centroids.getOrElse(defaultCentroids(corpus, nlist))
-    ivfSearch(prepQ(queries), cents, assignToCells(corpus, cents),
-      k, nprobe)
+    val spark = corpus.sparkSession
+    val centFrame = centroids.getOrElse(defaultCentroids(corpus, nlist))
+      .select(col("cent_id"), col("cent_v"))
+    val cents = RelationBridge.collectInternal(centFrame)
+    val assigned = assignToCells(corpus,
+      RelationBridge.localDf(spark, centFrame.schema, cents.toSeq))
+    ivfSearch(queries, cents, k, nprobe)(probed =>
+      Some(assigned.filter(col("cent_id").isin(probed: _*))))
   }
 
   /** The deterministic no-training coarse quantizer (the `nlist`
@@ -154,33 +166,136 @@ object Similarity {
       .select(col("cid"), col("cv"), col("cent_id"))
   }
 
-  /** The IVF search kernel shared by [[ivfTopK]] and
-    * [[ivfTopKIndexed]]: probe the `nprobe` nearest cells per query,
-    * rank only vectors in those cells. `prepped` is the (qid, qv)
-    * query frame; `assigned` is the (cid, cv, cent_id) cell map —
-    * inline or loaded from a persisted index.
+  private val CentroidSchema = StructType.fromDDL("cent_id long, cent_v array<long>")
+  private val AssignedSchema =
+    StructType.fromDDL("cid long, cv array<long>, cent_id long")
+  private val TopKSchema = StructType(Seq(StructField("qid", LongType),
+    StructField("rnk", IntegerType, nullable = false),
+    StructField("cid", LongType), StructField("score", LongType)))
+
+  /** The stored coarse quantizer, read with its declared schema (no
+    * schema-inference job).
     */
-  private def ivfSearch(prepped: DataFrame, cents: DataFrame,
-                        assigned: DataFrame, k: Int,
-                        nprobe: Int): DataFrame = {
-    // probe: nprobe nearest centroids per query
-    val wProbe = Window.partitionBy(col("qid"))
-      .orderBy(col("pscore").desc, col("cent_id"))
-    val probes = prepped
-      .crossJoin(broadcast(cents))
-      .withColumn("pscore", LongArrayDot(col("qv"), col("cent_v")))
-      .withColumn("prank", row_number().over(wProbe))
-      .filter(col("prank") <= nprobe)
-      .select(col("qid"), col("qv"), col("cent_id"))
-    // search only the probed cells
-    val wRank = Window.partitionBy(col("qid"))
-      .orderBy(col("score").desc, col("cid"))
-    broadcast(probes).join(assigned, Seq("cent_id"))
-      .filter(col("qid") =!= col("cid"))
-      .withColumn("score", LongArrayDot(col("qv"), col("cv")))
-      .withColumn("rnk", row_number().over(wRank))
-      .filter(col("rnk") <= k)
-      .select(col("qid"), col("rnk"), col("cid"), col("score"))
+  private def readCentroids(spark: SparkSession, indexPath: String): DataFrame =
+    spark.read.schema(CentroidSchema).parquet(s"$indexPath/centroids")
+
+  /** The IVF search kernel shared by [[ivfTopK]] and
+    * [[ivfTopKIndexed]] — top-k inside each partition, one global merge
+    * (REPOSE, ICDE 2021):
+    *
+    *  1. probe, on the driver: each collected query (qid, qv) scores the
+    *     `cents` rows (cent_id, cent_v) with LongArrayDot's arithmetic;
+    *     each qid keeps its first `nprobe` (row, cell) pairs by pscore
+    *     desc (NULL last), then cent_id;
+    *  2. scan: `cells(probed)` is the (cid, cv, cent_id) cell map cut to
+    *     the probed cells (None when none of them holds a vector); ONE
+    *     job over it keeps a bounded top-k per qid in every task;
+    *  3. merge the task heaps on the driver and rank by score desc
+    *     (NULL last), then cid, skipping qid == cid.
+    *
+    * Queries are broadcast-sized (they are collected; a local frame
+    * collects without a job). Eager: the scan runs on call and the
+    * result is a local frame (qid, rnk, cid, score).
+    */
+  private def ivfSearch(queries: DataFrame, cents: Array[InternalRow],
+                        k: Int, nprobe: Int)
+                       (cells: Seq[Long] => Option[DataFrame]): DataFrame = {
+    val spark = queries.sparkSession
+    val qs = RelationBridge.collectInternal(prepQ(queries))
+      .filterNot(_.isNullAt(0))
+    val qids = qs.map(_.getLong(0)).distinct
+    val heapOf = qids.zipWithIndex.toMap
+    // one heap per qid: query rows sharing a qid feed the same heap
+    val qHeap = qs.map(r => heapOf(r.getLong(0)))
+    val qv = qs.map(vec)
+    val cv = cents.map(vec)
+    val centIds = cents.map(r => Option.when(!r.isNullAt(0))(r.getLong(0)))
+    // cell -> the query rows probing it. The rows of one qid share its
+    // `nprobe` slots; a NULL cent_id keeps its slot but matches no cell.
+    val byCell = scala.collection.mutable.HashMap.empty[Long, Array[Int]]
+    for (rowsOfQid <- qs.indices.groupBy(qHeap).values) {
+      val pairs = for (q <- rowsOfQid; c <- cv.indices)
+        yield (dot(qv(q), cv(c)), centIds(c), q)
+      pairs.sortBy(p => (p._1, p._2))(ProbeOrder).take(nprobe).foreach {
+        case (_, id, q) =>
+          id.foreach(c => byCell(c) = byCell.getOrElse(c, Array.empty[Int]) :+ q)
+      }
+    }
+    val heaps = new IvfHeaps(qids.length, k)
+    if (k >= 1 && byCell.nonEmpty) cells(byCell.keys.toSeq.sorted).foreach { df =>
+      val cellQs = byCell.toMap
+      df.select(col("cid"), col("cv"), col("cent_id"))
+        .queryExecution.toRdd.mapPartitions { rows =>
+          val local = new IvfHeaps(qids.length, k)
+          rows.foreach { r =>
+            if (!r.isNullAt(0) && !r.isNullAt(2))
+              cellQs.get(r.getLong(2)).foreach { probing =>
+                val cid = r.getLong(0)
+                val v = vec(r)
+                probing.foreach { q =>
+                  if (qids(qHeap(q)) != cid)
+                    local.insert(qHeap(q), dot(qv(q), v), cid)
+                }
+              }
+          }
+          Iterator.single(local)
+        }.collect().foreach(heaps.merge)
+    }
+    RelationBridge.localDf(spark, TopKSchema, heaps.ranked(qids))
+  }
+
+  /** Probe order: pscore desc with NULL last, then cent_id asc with
+    * NULL first (Spark's defaults) — compared, never negated, since
+    * `-Long.MinValue` overflows.
+    */
+  private val ProbeOrder: Ordering[(Option[Long], Option[Long])] =
+    Ordering.Tuple2(Ordering.Option(Ordering.Long).reverse,
+      Ordering.Option(Ordering.Long))
+
+  /** Column 1 (qv, cent_v or cv) as longs; null when NULL. */
+  private def vec(r: InternalRow): Array[Long] =
+    if (r.isNullAt(1)) null else r.getArray(1).toLongArray()
+
+  /** LongArrayDot's arithmetic: the shorter side bounds the loop, long
+    * sums wrap; None when either side is NULL.
+    */
+  private def dot(a: Array[Long], b: Array[Long]): Option[Long] =
+    Option.when(a != null && b != null) {
+      var s = 0L; var i = 0
+      val n = math.min(a.length, b.length)
+      while (i < n) { s += a(i) * b(i); i += 1 }
+      s
+    }
+
+  /** Bounded top-k per heap: scored candidates by (score desc, cid),
+    * and NULL-scored ones (a NULL vector on either side) by cid alone —
+    * those rank after every scored one, as `score DESC NULLS LAST` does.
+    */
+  private final class IvfHeaps(n: Int, k: Int) extends Serializable {
+    private val scored = Array.fill(n)(new TopKPairsBuffer(k))
+    private val unscored = Array.fill(n)(new TopKPairsBuffer(k))
+
+    def insert(h: Int, score: Option[Long], cid: Long): Unit = score match {
+      case Some(sc) => scored(h).insert(sc, cid, distinctIds = false)
+      case None => unscored(h).insert(0L, cid, distinctIds = false)
+    }
+
+    def merge(o: IvfHeaps): Unit =
+      for (h <- 0 until n;
+           (from, to) <- Seq(o.scored(h) -> scored(h), o.unscored(h) -> unscored(h));
+           i <- 0 until from.n)
+        to.insert(from.scores(i), from.ids(i), distinctIds = false)
+
+    /** (qid, rnk, cid, score) rows, rnk 1..k per heap. */
+    def ranked(qids: Array[Long]): Seq[InternalRow] =
+      qids.indices.flatMap { h =>
+        val s = scored(h)
+        val all = (0 until s.n).map(i => (s.ids(i), s.scores(i): Any)) ++
+          (0 until unscored(h).n).map(i => (unscored(h).ids(i), null))
+        all.take(k).zipWithIndex.map { case ((cid, score), i) =>
+          InternalRow(qids(h), i + 1, cid, score)
+        }
+      }
   }
 
   /** Build a PERSISTED IVF index — the production build-once /
@@ -191,10 +306,8 @@ object Similarity {
     *     cent_v), `nlist` rows;
     *   - `indexPath/assigned/`  — every corpus vector's cell
     *     (cid, cv, cent_id), hive-PARTITIONED by cent_id so a query
-    *     job's cell probes prune whole directories (dynamic partition
-    *     pruning: the probe side is a broadcast, so the fact scan gets
-    *     a runtime pruning filter — at 100 TB a query touches
-    *     nprobe/nlist of the corpus files, not all of them);
+    *     reads only its probed cells' directories (at 100 TB a query
+    *     touches nprobe/nlist of the corpus files, not all of them);
     *
     * and query jobs [[ivfTopKIndexed]] LOAD it — no k-means, no
     * assignment pass, no corpus-wide anything at query time. Centroids
@@ -210,11 +323,10 @@ object Similarity {
     val cents =
       if (trainIters > 0) trainCentroids(corpus, nlist, trainIters)
       else defaultCentroids(corpus, nlist)
-    // nlist rows: one file is the right layout for a broadcast-side load
+    // nlist rows: one file is the right layout for a driver-side load
     cents.coalesce(1).write.mode("overwrite")
       .parquet(s"$indexPath/centroids")
-    val stored = spark.read.parquet(s"$indexPath/centroids")
-    assignToCells(corpus, stored)
+    assignToCells(corpus, readCentroids(spark, indexPath))
       .transform(graft.engine.Spread.byKey(_, col("cent_id")))
       .write.mode("overwrite").partitionBy("cent_id")
       .parquet(s"$indexPath/assigned")
@@ -227,40 +339,45 @@ object Similarity {
     * `semanticDedupWith` frozen-quantizer device applied to the index
     * artifact) and their cells append to the partitioned assignment
     * table — cost is O(new shard), the existing cell files are never
-    * rewritten, and cell directories only gain files (dynamic
-    * partition pruning in the query plan is unchanged).
+    * rewritten, and cell directories only gain files (a query lists
+    * `assigned/` on every call, so the next query sees them).
     *
     * The law (SimilaritySpec): ivfTopKIndexed over build(A) +
     * append(B) ≡ ivfTopK inline over A ∪ B with the same centroids —
     * exact equality, because assignment is deterministic per vector
     * given frozen centroids.
     */
-  def appendToIvfIndex(newVectors: DataFrame, indexPath: String): Unit = {
-    val spark = newVectors.sparkSession
-    val stored = spark.read.parquet(s"$indexPath/centroids")
-    assignToCells(newVectors, stored)
+  def appendToIvfIndex(newVectors: DataFrame, indexPath: String): Unit =
+    assignToCells(newVectors, readCentroids(newVectors.sparkSession, indexPath))
       .transform(graft.engine.Spread.byKey(_, col("cent_id")))
       .write.mode("append").partitionBy("cent_id")
       .parquet(s"$indexPath/assigned")
-  }
 
-  /** IVF top-k against a PERSISTED index ([[buildIvfIndex]]): loads
-    * the centroid artifact (broadcast-sized) and the cell-partitioned
-    * assignment table, then runs the SAME search kernel as the inline
-    * path — results are identical by construction (the oracle-gated
-    * law: q_simsearch_ivf_idx shares q_simsearch_ivf's oracle). The
-    * query plan contains NO quantizer training and NO assignment pass
-    * (PlanShapeSpec-pinned): one broadcast of the probes, one scan of
-    * the probed cells.
+  /** IVF top-k against a PERSISTED index ([[buildIvfIndex]]), through
+    * the SAME kernel as the inline path — results are identical by
+    * construction (the oracle-gated law: q_simsearch_ivf_idx shares
+    * q_simsearch_ivf's oracle). Every call reads `centroids/` with its
+    * declared schema and makes one listing of `assigned/`, so appends
+    * and rebuilds are always seen (no handle, no cache). The scan reads
+    * only the probed `cent_id=N` directories that exist — directories,
+    * not files, so the scan's own listing stays on the driver — with no
+    * partition discovery of the whole tree. Two jobs per call for a
+    * local query frame: the centroid read and the scan. No quantizer
+    * training, no assignment pass (PlanShapeSpec-pinned).
     */
   def ivfTopKIndexed(queries: DataFrame, indexPath: String, k: Int,
                      nprobe: Int = 4): DataFrame = {
     val spark = queries.sparkSession
-    val cents = spark.read.parquet(s"$indexPath/centroids")
-    val assigned = spark.read.parquet(s"$indexPath/assigned")
-      .select(col("cid"), col("cv"), col("cent_id").cast("long")
-        .as("cent_id")) // partition-column values parse as int
-    ivfSearch(prepQ(queries), cents, assigned, k, nprobe)
+    val cents = RelationBridge.collectInternal(readCentroids(spark, indexPath))
+    ivfSearch(queries, cents, k, nprobe) { probed =>
+      val root = new Path(s"$indexPath/assigned")
+      val present = root.getFileSystem(spark.sessionState.newHadoopConf())
+        .listStatus(root).map(_.getPath.getName).toSet
+      val dirs = probed.map(c => s"cent_id=$c").filter(present)
+      Option.when(dirs.nonEmpty)(spark.read.schema(AssignedSchema)
+        .option("basePath", root.toString)
+        .parquet(dirs.map(d => s"$root/$d"): _*))
+    }
   }
 
   /** Product-quantization (PQ) top-k with asymmetric-distance scoring

@@ -11,7 +11,7 @@ import org.apache.spark.sql.types._
 /** Bounded top-k state: parallel (scores, ids) arrays sorted by
   * (score desc, id asc), at most k entries.
   */
-final class TopKPairsBuffer(val k: Int) {
+final class TopKPairsBuffer(val k: Int) extends Serializable {
   var n: Int = 0
   val scores = new Array[Long](k)
   val ids = new Array[Long](k)

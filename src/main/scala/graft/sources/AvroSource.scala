@@ -45,9 +45,11 @@ import org.apache.spark.util.SerializableConfiguration
   *    resolution skips the unwanted fields during decode.
   *
   * Write path mirrors [[graft.engine.PgCopySource]]: one deflate-coded
-  * `.avro` container file per partition, task-id-suffixed names so
-  * speculative attempts never collide, abort deletes the attempt's
-  * file, `mode("overwrite")` truncates the directory driver-side first.
+  * `.avro` container file per partition, names embedding the query id
+  * and task id so appends and speculative attempts never collide,
+  * abort deletes the attempt's file, and the landing is staged
+  * ([[graft.engine.StagedDir]]) — a failed `mode("overwrite")` leaves
+  * the previous files intact.
   * As with every catalog-less DSv2 TableProvider, writers must pick
   * `mode("append")` or `mode("overwrite")` explicitly — Spark maps the
   * default ErrorIfExists onto catalogs, which this path-based source
@@ -136,7 +138,7 @@ private class AvroTable(path: String, tblSchema: StructType, splitSize: Long,
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder = {
     // fail at plan time if any column has no Avro mapping
     AvroConv.toAvroRecord(info.schema(), "graft_row")
-    new AvroWriteBuilder(path, info.schema(), conf)
+    new AvroWriteBuilder(path, info.schema(), info.queryId(), conf)
   }
 }
 
@@ -241,43 +243,44 @@ private class AvroRangeReader(range: AvroRange, required: StructType,
 // -----------------------------------------------------------------
 
 private class AvroWriteBuilder(path: String, schema: StructType,
-                               conf: SerializableConfiguration)
+                               writeId: String, conf: SerializableConfiguration)
     extends WriteBuilder with SupportsTruncate {
   private var doTruncate = false
   override def truncate(): WriteBuilder = { doTruncate = true; this }
   override def build(): Write = new Write {
     override def toBatch: BatchWrite =
-      new AvroBatchWrite(path, schema, doTruncate, conf)
+      new AvroBatchWrite(path, schema, writeId, doTruncate, conf)
   }
 }
 
 private case class AvroCommit(fileName: String) extends WriterCommitMessage
 
+/** Lands all-or-nothing through [[graft.engine.StagedDir]]: tasks write
+  * into a hidden staging sibling and the driver's commit swaps it in
+  * (overwrite) or moves the committed files in (append).
+  */
 private class AvroBatchWrite(path: String, schema: StructType,
-                             doTruncate: Boolean,
+                             writeId: String, doTruncate: Boolean,
                              conf: SerializableConfiguration) extends BatchWrite {
-  private def fs = new HPath(path).getFileSystem(conf.value)
+  private val staged = new graft.engine.StagedDir(path, writeId, "graft-avro", conf)
   override def createBatchWriterFactory(
       info: PhysicalWriteInfo): DataWriterFactory = {
-    val dir = new HPath(path)
-    if (doTruncate && fs.exists(dir)) fs.delete(dir, true)
-    fs.mkdirs(dir)
-    new AvroWriterFactory(path, schema, conf)
+    staged.create()
+    new AvroWriterFactory(staged.staging.toString, schema, writeId, conf)
   }
-  override def commit(messages: Array[WriterCommitMessage]): Unit = ()
-  override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    messages.collect { case AvroCommit(f) =>
-      fs.delete(new HPath(s"$path/$f"), false)
-    }
-  }
+  override def commit(messages: Array[WriterCommitMessage]): Unit =
+    staged.land(doTruncate, messages.collect { case AvroCommit(f) => f }.toSeq)
+  override def abort(messages: Array[WriterCommitMessage]): Unit =
+    staged.abort()
 }
 
 private class AvroWriterFactory(path: String, schema: StructType,
-                                conf: SerializableConfiguration)
+                                writeId: String, conf: SerializableConfiguration)
     extends DataWriterFactory {
   override def createWriter(partitionId: Int,
                             taskId: Long): DataWriter[InternalRow] =
-    new AvroDataWriter(path, schema, partitionId, taskId, conf.value)
+    new AvroDataWriter(path, schema,
+      f"part-$partitionId%05d-$writeId-$taskId.avro", conf.value)
 }
 
 /** Per-task container-file writer: streams records block-by-block
@@ -294,10 +297,8 @@ private class AvroWriterFactory(path: String, schema: StructType,
   * beside the retry's file).
   */
 private class AvroDataWriter(path: String, schema: StructType,
-                             partitionId: Int, taskId: Long,
-                             conf: Configuration)
+                             fileName: String, conf: Configuration)
     extends DataWriter[InternalRow] {
-  private val fileName = f"part-$partitionId%05d-$taskId.avro"
   private val tmpName = s"$fileName.tmp"
   private val avroSchema = AvroConv.toAvroRecord(schema, "graft_row")
   private val rowConv = AvroConv.writer(schema, avroSchema)

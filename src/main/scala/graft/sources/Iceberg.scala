@@ -34,8 +34,8 @@ import org.apache.spark.sql.functions.{approx_count_distinct, col, concat, lit, 
   *    before any manifest is opened, then prunes FILES against each
   *    entry's own partition value — at 100 TB a point query reads the
   *    manifests of one partition, not the table's (this is the same
-  *    metadata-pruning story as the persisted IVF index's dynamic
-  *    partition pruning, done at the table-format layer);
+  *    story as the persisted IVF index's probed-cell scan, done at the
+  *    table-format layer);
   *  - only the surviving parquet data files enter the Spark scan
   *    (`spark.read.parquet(files…)` — self-describing, column-pruned,
   *    filter-pushed like any parquet scan); with v2 position deletes
@@ -85,7 +85,10 @@ import org.apache.spark.sql.functions.{approx_count_distinct, col, concat, lit, 
 object Iceberg {
 
   private def om = new ObjectMapper()
-  private def hconf = new Configuration()
+  // the session's Hadoop configuration: `spark.hadoop.*` and session
+  // `fs.*` settings reach every metadata read and write
+  private def hconf: Configuration =
+    SparkSession.active.sessionState.newHadoopConf()
 
   // ---------------------------------------------------------------
   // spec Avro schemas (field-id props as the spec requires)
@@ -2438,13 +2441,14 @@ object Iceberg {
     else {
       val slices = math.min(paths.size,
         spark.sparkContext.defaultParallelism).max(1)
+      val sconf = new org.apache.spark.util.SerializableConfiguration(
+        spark.sessionState.newHadoopConf())
       spark.sparkContext.parallelize(paths, slices)
         .mapPartitions { it =>
-          // ONE Hadoop Configuration per task, not per footer: the
-          // constructor parses the default XML resources every time
-          // (~40 ms), which at thousands of files dwarfed the actual
-          // footer reads
-          val conf = new Configuration()
+          // ONE Hadoop Configuration per task, not per footer: building
+          // one per file cost ~40 ms each, which at thousands of files
+          // dwarfed the actual footer reads
+          val conf = sconf.value
           it.map(p => p -> footerInfo(p, conf))
         }
         .collect().toMap

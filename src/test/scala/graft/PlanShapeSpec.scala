@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 /** Physical-plan shape guards for the properties that matter at 100 TB.
   * Correctness gates catch wrong VALUES; these catch wrong PLANS — a
   * regression that un-broadcasts a dimension join or stops pushing
@@ -401,30 +403,66 @@ class PlanShapeSpec extends SparkSpec {
     assert(!p.contains("mapPartitions"), p)
   }
 
-  test("q_simsearch_ivf_idx: the indexed query plan contains NO " +
-       "quantizer training and NO assignment pass — only the index " +
-       "scans + broadcast probes, with dynamic partition pruning on " +
-       "the cell-partitioned assignment table") {
-    val df = SparkEntry.queries("q_simsearch_ivf_idx")(spark, sf())
-    val p = df.queryExecution.executedPlan.toString
-    // the assignment window column exists only in the BUILD job; a
-    // query plan carrying it would be re-assigning the corpus
-    assert(!p.contains("crank"), p)
-    // no aggregation at all before the final ranking: k-means (posexplode
-    // + groupBy) and assignment both live in the build job
-    assert(!p.contains("HashAggregate"), p)
-    // the probed-cells join: probes broadcast, assignment table streams
-    assert(p.contains("BroadcastHashJoin"), p)
-    // the 100 TB property: cell probes prune the partitioned index scan
-    // at RUNTIME (nprobe/nlist of the files read, not all of them)
-    assert(p.contains("dynamicpruning"), p)
-    // every embeddings scan is the FILTERED query side (the DPP
-    // subquery legitimately repeats it) — never a full-corpus scan:
-    // the corpus is only ever read from the index artifacts
-    val embScans = p.linesIterator
-      .filter(_.contains("embeddings.parquet")).toList
-    assert(embScans.nonEmpty &&
-      embScans.forall(_.contains("LessThan(vec_id,10)")), embScans)
+  test("q_simsearch_ivf_idx: one query runs at most 2 single-stage jobs " +
+       "and opens only the centroids and the probed cells' files — no " +
+       "quantizer training, no assignment pass, no corpus scan") {
+    import org.apache.spark.sql.functions.col
+    import org.apache.spark.scheduler._
+    // the query returns a local frame: nothing of the corpus, the
+    // assignment window or a join is left in its plan
+    val p = plan("q_simsearch_ivf_idx")
+    assert(!p.contains("crank") && !p.contains("embeddings.parquet"), p)
+
+    val e = spark.read.parquet(sf() + "/embeddings.parquet")
+      .select("vec_id", "embedding")
+    val queries = spark.createDataFrame(
+      java.util.Arrays.asList(e.filter(col("vec_id") < 10).collect(): _*), e.schema)
+    val root = java.nio.file.Files.createTempDirectory("graft_ivf_open").toString
+    spark.conf.set("fs.graftrec.impl", classOf[OpenRecordingFs].getName)
+    spark.conf.set("fs.graftrec.impl.disable.cache", "true")
+    try {
+      graft.operators.Similarity.buildIvfIndex(e, s"graftrec://$root", nlist = 16)
+      val probed = graft.operators.IvfReference.probes(queries,
+          spark.read.parquet(s"$root/centroids"), nprobe = 4)
+        .select("cent_id").distinct().collect().map(_.getLong(0)).toSet
+      def parquetFiles(dir: String): Set[String] =
+        Option(new java.io.File(root, dir).listFiles()).toSeq.flatten
+          .map(_.getPath).filter(_.endsWith(".parquet")).toSet
+      val cells = new java.io.File(root, "assigned").list()
+        .filter(_.startsWith("cent_id=")).map(_.stripPrefix("cent_id=").toLong)
+      assert(probed.nonEmpty && probed.size < cells.length)
+      val want = parquetFiles("centroids") ++
+        probed.flatMap(c => parquetFiles(s"assigned/cent_id=$c"))
+
+      val sc = spark.sparkContext
+      val jobs, stages = new java.util.concurrent.atomic.AtomicInteger()
+      val listener = new SparkListener {
+        override def onJobStart(j: SparkListenerJobStart): Unit =
+          jobs.incrementAndGet()
+        override def onStageCompleted(s: SparkListenerStageCompleted): Unit =
+          stages.incrementAndGet()
+      }
+      org.apache.spark.graftbridge.ListenerBridge.waitUntilEmpty(sc)
+      OpenRecordingFs.opened.clear()
+      sc.addSparkListener(listener)
+      val top =
+        try graft.operators.Similarity.ivfTopKIndexed(queries,
+          s"graftrec://$root", k = 5, nprobe = 4).collect()
+        finally {
+          org.apache.spark.graftbridge.ListenerBridge.waitUntilEmpty(sc)
+          sc.removeSparkListener(listener)
+        }
+      assert(top.length == 50)
+      // the centroid read and the probed-cell scan; one stage each, so
+      // no exchange: no window, no join, no assignment pass
+      assert(jobs.get <= 2 && stages.get == jobs.get, (jobs, stages))
+      // the 100 TB property, read off the filesystem: nprobe of nlist
+      // cells' files, plus the centroids, and nothing else
+      assert(OpenRecordingFs.opened.asScala.toSet == want)
+    } finally {
+      spark.conf.unset("fs.graftrec.impl")
+      spark.conf.unset("fs.graftrec.impl.disable.cache")
+    }
   }
 
   test("q_simsearch_pq_idx: the indexed ADC query never touches corpus " +
@@ -529,4 +567,22 @@ class PlanShapeSpec extends SparkSpec {
     assert(!p.contains("SortMergeJoin") &&
       !p.contains("CartesianProduct"), p)
   }
+}
+
+/** The local filesystem under its own scheme (`graftrec:`), recording
+  * the path of every file opened for reading.
+  */
+class OpenRecordingFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getScheme: String = "graftrec"
+  override def getUri: java.net.URI = java.net.URI.create("graftrec:///")
+  override def open(f: org.apache.hadoop.fs.Path,
+                    bufferSize: Int): org.apache.hadoop.fs.FSDataInputStream = {
+    OpenRecordingFs.opened.add(f.toUri.getPath)
+    super.open(f, bufferSize)
+  }
+}
+
+object OpenRecordingFs {
+  val opened: java.util.Set[String] =
+    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 }

@@ -220,6 +220,40 @@ class SinkSpec extends SparkSpec {
       after.keys.filter(_.startsWith("t/part-")).toSeq.sorted)
   }
 
+  test("avro overwrite is atomic: a task failing mid-write leaves the " +
+       "old .avro files byte-identical, no new file visible") {
+    val root = java.nio.file.Files.createTempDirectory("avro_atomic").toString
+    val cfg = SinkConfig(format = "avro", path = Some(root), mode = "overwrite")
+    def avroFiles: Map[String, Seq[Byte]] =
+      Option(new java.io.File(root, "t").listFiles()).toSeq.flatten
+        .filter(_.getName.endsWith(".avro"))
+        .map(f => f.getName -> java.nio.file.Files.readAllBytes(f.toPath).toSeq)
+        .toMap
+    Sink.write(Seq((1L, "old"), (2L, "older")).toDF("id", "txt").repartition(2),
+      "t", cfg)
+    val before = avroFiles
+    assert(before.size == 2)
+    // partition 2 holds ids 50..74: ten rows reach its file before the
+    // UDF throws, and the other partitions may finish theirs
+    val boom = org.apache.spark.sql.functions.udf { (id: Long) =>
+      if (id == 60L) throw new IllegalStateException("injected fault")
+      id
+    }
+    val failing = spark.range(0, 100, 1, 4)
+      .select(boom(col("id")).as("id"), lit("new").as("txt"))
+    val e = intercept[Exception](Sink.write(failing, "t", cfg))
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("injected fault")))
+    assert(avroFiles == before)
+    assert(new java.io.File(root).list().forall(n => !n.startsWith(".t.")))
+    // a retried overwrite then lands the new generation whole
+    Sink.write(spark.range(0, 100, 1, 4).select(col("id"), lit("new").as("txt")),
+      "t", cfg)
+    assert(avroFiles.keySet.intersect(before.keySet).isEmpty)
+    assert(spark.read.format("graft-avro").load(s"$root/t")
+      .filter(col("txt") === "new").count() === 100)
+  }
+
   test("pgcopy append: the manifest keeps the prior manifest's files and " +
        "adds exactly the files this write committed") {
     val root = java.nio.file.Files.createTempDirectory("pgcopy_append").toString
@@ -279,6 +313,28 @@ class SinkSpec extends SparkSpec {
       df.write.format("graft-avro").mode("overwrite").save(s"graftsess://$root/a")
       val back = spark.read.format("graft-avro").load(s"graftsess://$root/a")
       assert(back.orderBy("id").collect().toSeq == df.orderBy("id").collect().toSeq)
+    } finally {
+      spark.conf.unset("fs.graftsess.impl")
+      spark.conf.unset("fs.graftsess.impl.disable.cache")
+    }
+  }
+
+  test("iceberg sink and scan resolve paths through the session's Hadoop " +
+       "configuration, on the driver and in the footer-stats tasks") {
+    val root = java.nio.file.Files.createTempDirectory("session_ice").toString
+    spark.conf.set("fs.graftsess.impl", classOf[SessionOnlyFs].getName)
+    spark.conf.set("fs.graftsess.impl.disable.cache", "true")
+    try {
+      val cfg = SinkConfig(format = "iceberg", path = Some(s"graftsess://$root"),
+        partitionBy = Seq("grp"))
+      val first = Seq((1L, "a"), (2L, "b"), (3L, "a")).toDF("id", "grp")
+      Sink.write(first, "ice", cfg)
+      // the second write appends a snapshot to the existing table
+      Sink.write(Seq((4L, "b")).toDF("id", "grp"), "ice", cfg)
+      val back = graft.sources.Iceberg.scan(spark, s"graftsess://$root/ice")
+      assert(back.select("id", "grp").orderBy("id").as[(Long, String)]
+        .collect().toSeq == Seq((1L, "a"), (2L, "b"), (3L, "a"), (4L, "b")))
+      assert(new java.io.File(root, "ice/metadata/version-hint.text").exists)
     } finally {
       spark.conf.unset("fs.graftsess.impl")
       spark.conf.unset("fs.graftsess.impl.disable.cache")

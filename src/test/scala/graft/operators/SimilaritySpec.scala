@@ -1,5 +1,7 @@
 package graft.operators
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
@@ -81,6 +83,88 @@ class SimilaritySpec extends SparkSpec {
     // the appended shard's vectors really landed in the cell map
     val nAssigned = spark.read.parquet(s"$incrPath/assigned").count()
     assert(nAssigned === e.count())
+  }
+
+  private val VecSchema = org.apache.spark.sql.types.StructType.fromDDL(
+    "vec_id long, embedding array<float>")
+
+  private def vectors(rows: (Long, Seq[Float])*) =
+    spark.createDataFrame(
+      java.util.Arrays.asList(rows.map { case (id, v) =>
+        org.apache.spark.sql.Row(id, v) }: _*), VecSchema)
+
+  /** Every row in rank order, duplicates kept. */
+  private def rows(df: org.apache.spark.sql.DataFrame): Seq[Seq[Any]] =
+    df.orderBy("qid", "rnk", "cid").collect().map(_.toSeq).toSeq
+
+  test("IVF kernel equals the window reference row for row: score ties, " +
+       "NULL embeddings on both sides, nprobe >= nlist, a probed cell " +
+       "with no directory, k past the candidates") {
+    // cells 0..3 are the four lowest ids; 10/11 and 16/17 are exact
+    // copies (score ties), 12 has no embedding, and the query 103
+    // appears twice with different vectors (one heap per qid)
+    val corpus = vectors(
+      0L -> Seq(0.9f, 0.1f, 0f, 0f), 1L -> Seq(0.1f, 0.9f, 0f, 0f),
+      2L -> Seq(0f, 0f, 0.9f, 0.1f), 3L -> Seq(0f, 0f, 0.1f, 0.9f),
+      10L -> Seq(0.5f, 0.5f, 0f, 0f), 11L -> Seq(0.5f, 0.5f, 0f, 0f),
+      12L -> null, 13L -> Seq(0.2f, 0.1f, 0.7f, 0f),
+      14L -> Seq(0f, 0.3f, 0.3f, 0.3f), 15L -> Seq(0.6f, 0f, 0f, 0.4f),
+      16L -> Seq(0f, 0f, 0.5f, 0.5f), 17L -> Seq(0f, 0f, 0.5f, 0.5f),
+      18L -> Seq(0.3f, 0.3f, 0.3f, 0.3f), 19L -> Seq(-0.5f, 0.2f, 0.1f, 0f))
+    val qs = vectors(10L -> Seq(0.5f, 0.5f, 0f, 0f), 100L -> null,
+      101L -> Seq(0.4f, 0.4f, 0.1f, 0.1f), 102L -> Seq(0f, 0f, 0.3f, 0.3f),
+      103L -> Seq(1f, 0f, 0f, 0f), 103L -> Seq(0f, 0f, 0f, 1f))
+    val path = java.nio.file.Files.createTempDirectory("graft_ivf_ref").toString
+    Similarity.buildIvfIndex(corpus, path, nlist = 4)
+    val cases = Seq((2, 3), (1, 2), (6, 50))
+    for ((nprobe, k) <- cases) {
+      val want = rows(IvfReference.overIndex(qs, path, k, nprobe))
+      assert(want.nonEmpty)
+      assert(rows(Similarity.ivfTopKIndexed(qs, path, k, nprobe)) == want,
+        s"indexed nprobe=$nprobe k=$k")
+      assert(rows(Similarity.ivfTopK(qs, corpus, k, nlist = 4,
+        nprobe = nprobe)) == want, s"inline nprobe=$nprobe k=$k")
+    }
+    // the NULL rows rank last, by cid
+    val wide = rows(Similarity.ivfTopKIndexed(qs, path, k = 50, nprobe = 6))
+    assert(wide.filter(_(0) == 100L).forall(_(3) == null))
+    assert(wide.filter(_(0) == 101L).last == Seq(101L, 14, 12L, null))
+    // a probed cell without a directory contributes nothing
+    val gone = new java.io.File(path, "assigned/cent_id=2")
+    assert(gone.isDirectory)
+    org.apache.commons.io.FileUtils.deleteDirectory(gone)
+    for ((nprobe, k) <- cases)
+      assert(rows(Similarity.ivfTopKIndexed(qs, path, k, nprobe)) ==
+        rows(IvfReference.overIndex(qs, path, k, nprobe)),
+        s"missing cell nprobe=$nprobe k=$k")
+  }
+
+  test("IVF index freshness: a query sees vectors appended after the " +
+       "previous query, and a rebuild's new centroids") {
+    val vecs = e.select("vec_id", "embedding")
+    val local = spark.createDataFrame(
+      vecs.filter(col("vec_id") < 3).collect().toSeq.asJava, vecs.schema)
+    val corpus = vecs.filter(col("vec_id") >= 3)
+    val path = java.nio.file.Files.createTempDirectory("graft_ivf_fresh").toString
+    Similarity.buildIvfIndex(corpus, path, nlist = 16)
+    def answer = rows(Similarity.ivfTopKIndexed(local, path, k = 5, nprobe = 1))
+    val before = answer
+    // twice the query vector scores twice its squared norm: rank 1
+    val doubled = local.select((col("vec_id") + 1000000L).as("vec_id"),
+      transform(col("embedding"), x => x * 2f).as("embedding"))
+    Similarity.appendToIvfIndex(doubled, path)
+    val appended = answer
+    assert(appended != before)
+    assert(appended.filter(_(1) == 1).map(r => r(0) -> r(2)).toSet ==
+      Set(0L -> 1000000L, 1L -> 1000001L, 2L -> 1000002L))
+    val union = corpus.unionByName(doubled)
+    assert(appended == rows(Similarity.ivfTopK(local, union, k = 5,
+      nprobe = 1, centroids = Some(spark.read.parquet(s"$path/centroids")))))
+    Similarity.buildIvfIndex(union, path, nlist = 8)
+    val rebuilt = answer
+    assert(rebuilt == rows(Similarity.ivfTopK(local, union, k = 5, nlist = 8,
+      nprobe = 1)))
+    assert(rebuilt != appended)
   }
 
   test("persisted PQ index: codebook + code table reload to the exact " +
