@@ -1413,13 +1413,13 @@ object SparkEntry {
     }),
 
     // ---- north star CAPSTONE: full corpus-preparation pipeline —
-    //      near-dup dedup (pairs -> components -> keep canonical) ->
+    //      near-dup dedup (pairs -> components -> keep canonical; on
+    //      the driver at this size, Dedup.keepCanonicalJaccard) ->
     //      normalize -> token-count quality gate -> stratified sample ----
     "q_corpus_pipeline" -> ((s, dir) => {
       import graft.operators.{Dedup, Sampling, TextAnalysis}
       val docs = t(s, dir, "documents")
-      val deduped = Dedup.keepCanonical(docs,
-        Dedup.jaccardPairs(docs, tau = 0.3))
+      val deduped = Dedup.keepCanonicalJaccard(docs, tau = 0.3)
       val gated = deduped
         .withColumn("norm_text", TextAnalysis.normalize(col("text")))
         .withColumn("n_tok",

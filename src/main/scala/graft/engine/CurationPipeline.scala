@@ -14,11 +14,13 @@ import org.apache.spark.sql.functions._
   * gcs -> bq -> postgres.
   *
   * Every stage maps 1:1 onto the SAME operator the oracle-gated queries
-  * call (`Dedup.keepCanonical`, `TextAnalysis.normalize`,
+  * call (`Dedup.keepCanonicalJaccard`, `TextAnalysis.normalize`,
   * `Sampling.stratifiedSample`, ...) — the YAML surface adds zero new
-  * semantics, so `PipelineSpec` pins config-equals-code equality
-  * against the hand-composed `q_corpus_pipeline` stages, and the scale
-  * properties are exactly the operators' own.
+  * semantics, so the scale properties are exactly the operators' own.
+  * `PipelineSpec` pins config-equals-code equality against the
+  * `q_corpus_pipeline` stages composed by hand from the distributed
+  * operators (`Dedup.keepCanonical` over `Dedup.jaccardPairs`), which
+  * also pins the `dedup` stage's driver tier to the distributed path.
   *
   * {{{
   * pipeline:
@@ -162,16 +164,20 @@ object CurationPipeline {
       val c = st.str("column", "url")
       df.withColumn(c, graft.operators.Curation.canonicalUrl(col(c)))
     case "exact_dedup" =>
-      // keep the min-id copy per distinct key value (md5 map-side in
-      // Dedup.exact; only (key, id) crosses the exchange)
+      // keep the min-id copy per distinct key value: Dedup.exact groups
+      // by the raw key column (no hash), so the key itself — the whole
+      // text by default — crosses the exchange with its min id
       val id = st.str("id", "doc_id")
       val kept = graft.operators.Dedup.exact(df, st.str("key", "text"), id)
         .select(col("keep_id").as(id))
       df.join(kept, Seq(id), "left_semi")
     case "dedup" =>
-      graft.operators.Dedup.keepCanonical(df,
-        graft.operators.Dedup.jaccardPairs(df, tau = st.dbl("tau", 0.3),
-          k = st.int("k", 3)),
+      // near-dup keep-canonical (jaccard pairs -> components -> min id);
+      // eager: a corpus within Dedup.SmallCorpusDocs is resolved on the
+      // driver from one collect, a larger one takes the distributed
+      // pair pipeline
+      graft.operators.Dedup.keepCanonicalJaccard(df,
+        tau = st.dbl("tau", 0.3), k = st.int("k", 3),
         id = st.str("id", "doc_id"))
     case "quality_gate" =>
       df.withColumn("norm_text",

@@ -1,7 +1,10 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.RelationBridge
 import graft.functions.StableHash._
 import graft.operators.TextAnalysis.shingleHashes
 
@@ -464,28 +467,6 @@ object Dedup {
     if (broadcastable) verified.dropDuplicates("d1", "d2") else verified
   }
 
-  /** Diagnostic for CandProbe: per-arm candidate counts of the fused
-    * ensemble index (jaccard self-join arm, containment asymmetric arm,
-    * unique union) — attributes candidate-volume growth to an arm.
-    */
-  private[operators] def ensembleCandStats(docs: DataFrame, tauJ: Double,
-      tauC: Double): (Long, Long, Long) = {
-    val sets = graft.engine.Spread(docs).select(col("doc_id"),
-      shingleHashes(col("text"), 3).as("sh"))
-    val (sumDf2, sumDf) = postingStats(sets)
-    val setBytes = sumDf * 8L
-    System.err.println(s"[candprobe] sumDf2=$sumDf2 sumDf=$sumDf " +
-      s"setBytes=${setBytes / 1024 / 1024}MB " +
-      s"naive=${sumDf2 <= NaivePairBudget} " +
-      s"broadcastVerify=${setBytes <= BroadcastVerifyBytes / 2}")
-    val idx = prefixIndexMulti(sets,
-      Seq("pJ" -> tauJ, "pC" -> tauC), 0)
-    val jac = jaccardCands(idx.perDoc, "pJ")
-    val con = containmentCands(idx.perDoc, "pC")
-    (jac.count(), con.count(),
-      jac.unionByName(con).dropDuplicates("d1", "d2").count())
-  }
-
   private[operators] def jaccardPairsFromSetsPrefix(
       sets: DataFrame, tau: Double, maxPostings: Int,
       verifyBytesHint: Option[Long] = None): DataFrame = {
@@ -592,6 +573,10 @@ object Dedup {
     * exact, else a pruned-scan count() of the source — never the derived
     * shingle frame, whose count would re-tokenize the corpus): at 100 TB
     * a gate that re-runs shingling is itself a full extra corpus pass.
+    *
+    * The same bound admits [[keepCanonicalJaccard]]'s driver tier: at or
+    * under it the whole near-dup keep-canonical runs on the driver from
+    * one collect of (id, shingle set), and the collect is the gate.
     */
   private[operators] val SmallCorpusDocs = 10000L
 
@@ -717,8 +702,11 @@ object Dedup {
     */
   private def overlapPairsFromSets(sets: DataFrame,
                                    maxPostings: Int): DataFrame = {
-    val posts0 = sets.select(col("doc_id"), size(col("sh")).as("n"),
-      explode(col("sh")).as("h"))
+    // a NULL doc_id pairs with nothing: OverlapPairArray reads ids as
+    // primitive longs, where a NULL would pair as id 0
+    val posts0 = sets.filter(col("doc_id").isNotNull)
+      .select(col("doc_id"), size(col("sh")).as("n"),
+        explode(col("sh")).as("h"))
     // EXPLICIT repartition by the bucket key: the enumeration stage's
     // cost is the Σ df² PAIR stream, not its input bytes, and AQE's
     // byte-based coalescing folded the few-MB post-shuffle partitions
@@ -1309,6 +1297,38 @@ object Dedup {
       .select(col("d1"), col("d2"), col("hamming"))
   }
 
+  /** Union-find over long ids, union by MIN root: every root is the
+    * minimum id of its component, the canonical label every tier of
+    * [[connectedComponents]] and [[keepCanonicalJaccard]] returns.
+    * `LongMap` keeps keys and values unboxed — at the 4M-edge ceiling of
+    * the driver tier a boxed map costs seconds of allocation.
+    */
+  private final class MinRootUnionFind {
+    private val parent = scala.collection.mutable.LongMap.empty[Long]
+
+    def find(x: Long): Long = {
+      var r = x
+      while (parent.getOrElse(r, r) != r) r = parent.getOrElse(r, r)
+      var c = x
+      while (parent.getOrElse(c, c) != c) {
+        val n = parent.getOrElse(c, c); parent(c) = r; c = n
+      }
+      r
+    }
+
+    def union(a: Long, b: Long): Unit = {
+      val ra = find(a); val rb = find(b)
+      if (ra != rb) {
+        if (ra < rb) parent(rb) = ra else parent(ra) = rb
+      }
+    }
+
+    /** Exactly the nodes that are not their component's minimum: every
+      * entry points strictly toward the min, roots are never assigned.
+      */
+    def nonRoots: Iterator[Long] = parent.keysIterator
+  }
+
   /** Connected components over near-dup pairs (d1, d2). Returns
     * (node, component) where component = the minimum doc_id reachable —
     * the canonical representative.
@@ -1380,25 +1400,9 @@ object Dedup {
       import spark.implicits._
       e.select(col("a"), col("b")).as[(Long, Long)]
         .mapPartitions { it =>
-          val parent = scala.collection.mutable.LongMap.empty[Long]
-          def find(x0: Long): Long = {
-            var r = x0
-            while (parent.getOrElse(r, r) != r) r = parent.getOrElse(r, r)
-            var c = x0
-            while (parent.getOrElse(c, c) != c) {
-              val n = parent.getOrElse(c, c); parent(c) = r; c = n
-            }
-            r
-          }
-          it.foreach { case (a, b) =>
-            val ra = find(a); val rb = find(b)
-            if (ra != rb) {
-              if (ra < rb) parent(rb) = ra else parent(ra) = rb
-            }
-          }
-          // parent keys = exactly the non-root nodes (every entry points
-          // strictly toward the min; roots are never assigned)
-          parent.keysIterator.map(n => (find(n), n))
+          val uf = new MinRootUnionFind
+          it.foreach { case (a, b) => uf.union(a, b) }
+          uf.nonRoots.map(n => (uf.find(n), n))
         }
         .toDF("a", "b")
     }
@@ -1434,28 +1438,11 @@ object Dedup {
       val es = labeled(pairs, "graft.cc: driver union-find collect") {
         edges.collect().map(r => (r.getLong(0), r.getLong(1)))
       }
-      // LongMap: unboxed keys/values — at the 4M-edge ceiling the boxed
-      // Map costs seconds of allocation for zero benefit
-      val parent = scala.collection.mutable.LongMap.empty[Long]
-      def find(x: Long): Long = {
-        var r = x
-        while (parent.getOrElse(r, r) != r) r = parent.getOrElse(r, r)
-        var c = x
-        while (parent.getOrElse(c, c) != c) {
-          val n = parent.getOrElse(c, c); parent(c) = r; c = n
-        }
-        r
-      }
-      es.foreach { case (a, b) =>
-        val (ra, rb) = (find(a), find(b))
-        // union by MIN root keeps "component = min reachable id" exact
-        if (ra != rb) {
-          if (ra < rb) parent(rb) = ra else parent(ra) = rb
-        }
-      }
+      val uf = new MinRootUnionFind
+      es.foreach { case (a, b) => uf.union(a, b) }
       val nodes = es.iterator.flatMap(e => Iterator(e._1, e._2)).toSet
       return nodes.toSeq.sorted
-        .map(n => (n, find(n))).toDF("node", "component")
+        .map(n => (n, uf.find(n))).toDF("node", "component")
         .repartition(spark.sparkContext.defaultParallelism)
     }
     // ---- distributed path: alternating large-star / small-star ----
@@ -1548,6 +1535,124 @@ object Dedup {
       .withColumn("component", coalesce(col("component"), col(id)))
       .filter(col(id) === col("component"))
       .drop("component")
+  }
+
+  /** Near-dup keep-canonical over word k-shingle Jaccard in one call:
+    * the rows of `keepCanonical(docs, jaccardPairs(docs, tau, k), id)`,
+    * with the pairs taken over `id`. This is the curation pipeline's
+    * `dedup` stage.
+    *
+    * Corpora of at most [[SmallCorpusDocs]] documents run on the driver:
+    * ONE job collects (id, shingle hash set), and that job is also the
+    * size gate (`coalesce(1).limit(SmallCorpusDocs + 1)` stops reading
+    * past the bound). The pairs are found with the AllPairs prefix
+    * filter and an exact sorted-set intersect, the components with the
+    * min-root union-find, and the non-canonical ids return as a literal
+    * set that filters the corpus — the whole pair pipeline, edge
+    * checkpoint and canonical re-join (about 19 jobs on a 1,000-doc
+    * corpus) collapse into the collect. The call is eager: the collect
+    * runs when it is made. NULL ids are dropped, as `keepCanonical`
+    * drops them.
+    *
+    * Larger corpora take the distributed composition unchanged; the
+    * gate's row count is the lower bound its own size gate reads, so no
+    * separate count job runs.
+    */
+  def keepCanonicalJaccard(docs: DataFrame, tau: Double, k: Int = 3,
+                           id: String = "doc_id"): DataFrame =
+    keepCanonicalJaccard(docs, tau, k, id, SmallCorpusDocs)
+
+  /** [[keepCanonicalJaccard]] with the driver-tier bound as a parameter
+    * (the law tests force either path with it).
+    */
+  private[operators] def keepCanonicalJaccard(docs: DataFrame, tau: Double,
+      k: Int, id: String, driverDocs: Long): DataFrame = {
+    val sets = docs.select(col(id).cast("long").as("doc_id"),
+      shingleHashes(col("text"), k).as("sh"))
+    val gate = math.min(driverDocs, Int.MaxValue - 1L).toInt + 1
+    val rows = labeled(docs, "graft.dedup: driver tier collect") {
+      RelationBridge.collectInternal(sets.coalesce(1).limit(gate))
+    }
+    val dropped =
+      if (rows.length > driverDocs) None else droppedIdsLocal(rows, tau)
+    dropped match {
+      case Some(ids) =>
+        // a literal set, not a broadcast join: building a broadcast of
+        // even a local relation runs a job, a filter runs none
+        val kept = graft.engine.Spread(docs).filter(col(id).isNotNull)
+        if (ids.isEmpty) kept else kept.filter(!col(id).isin(ids.toSeq: _*))
+      case None =>
+        keepCanonical(docs, jaccardPairsFromSets(
+          graft.engine.Spread(docs).select(col(id).as("doc_id"),
+            shingleHashes(col("text"), k).as("sh")),
+          tau, maxPostings = 0, docCount = rows.length.toLong), id)
+    }
+  }
+
+  /** Driver tier of [[keepCanonicalJaccard]]: from collected
+    * (id, shingle set) rows, the ids `keepCanonical` drops — every
+    * paired id that is not its component's minimum — sorted.
+    *
+    * Pairs are exactly the naive path's: per-row sets, pairs of rows
+    * with different ids sharing a shingle, kept when
+    * `inter.toDouble / (n1 + n2 - inter) >= tau`. Candidates come from
+    * the AllPairs prefix filter: shingles in ascending (df, hash) order,
+    * df = 1 shingles dropped, and a row of size n contributes its first
+    * m - a + 1 reduced shingles, where a is the least intersection with
+    * `a.toDouble / n >= tau` — a qualifying pair has
+    * inter / n1 >= inter / union >= tau, so inter >= a, and its rarest
+    * shared shingle lies in both prefixes. The bound is taken in the
+    * same double arithmetic as the verification, so a pair at exactly
+    * tau is never filtered out by rounding.
+    *
+    * `None` when two rows share both id and set size: the naive path's
+    * (d1, d2, n1, n2) group-by then SUMS their overlaps into one pair,
+    * which a per-row-pair method does not reproduce; the caller falls
+    * back to the distributed path.
+    */
+  private def droppedIdsLocal(rows: Array[InternalRow],
+                              tau: Double): Option[Array[Long]] = {
+    // NULL ids and NULL or empty sets take part in no pair
+    val live = rows.filter(r => !r.isNullAt(0) && !r.isNullAt(1) &&
+      r.getArray(1).numElements() > 0)
+    val ids = live.map(_.getLong(0))
+    val sets = live.map { r =>
+      val a = r.getArray(1).toLongArray(); java.util.Arrays.sort(a); a
+    }
+    val keys = ids.indices.map(i => (ids(i), sets(i).length))
+    if (keys.distinct.size < keys.size) return None
+    // the verification's merge walk reads ArrayData
+    val packed = sets.map(UnsafeArrayData.fromPrimitiveArray)
+    // global rarity rank of every shingle held by >= 2 rows, ascending
+    // (df, hash); rows carry their shared shingles as sorted ranks
+    val df = scala.collection.mutable.LongMap.empty[Int]
+    sets.foreach(_.foreach(h => df(h) = df.getOrElse(h, 0) + 1))
+    val shared = df.keysIterator.filter(df(_) >= 2).toArray
+      .sortBy(h => (df(h), h))
+    val rank = scala.collection.mutable.LongMap.empty[Int]
+    shared.indices.foreach(r => rank(shared(r)) = r)
+    val index = Array.fill(shared.length)(List.empty[Int])
+    val seen = Array.fill(sets.length)(-1)
+    val uf = new MinRootUnionFind
+    for (i <- sets.indices) {
+      val n = sets(i).length
+      var minInter = math.max(1, math.floor(tau * n).toInt - 1)
+      while (minInter <= n && minInter.toDouble / n < tau) minInter += 1
+      val reduced = sets(i).map(rank.getOrElse(_, -1)).filter(_ >= 0).sorted
+      reduced.take(reduced.length - minInter + 1).foreach { r =>
+        index(r).foreach { j =>
+          if (seen(j) != i && ids(j) != ids(i)) {
+            seen(j) = i
+            val inter = graft.plans.SortedLongArrayIntersectSize
+              .count(packed(i), packed(j))
+            if (inter.toDouble / (n + sets(j).length - inter) >= tau)
+              uf.union(ids(i), ids(j))
+          }
+        }
+        index(r) = i :: index(r)
+      }
+    }
+    Some(uf.nonRoots.toArray.sorted)
   }
 
   /** Keep-BEST-per-cluster: the production keep policy — per near-dup

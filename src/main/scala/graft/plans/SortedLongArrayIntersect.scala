@@ -39,20 +39,9 @@ case class SortedLongArrayIntersectSize(left: Expression, right: Expression)
   override def dataType: DataType = LongType
   override def prettyName: String = "sorted_long_array_intersect_size"
 
-  override protected def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val nx = x.numElements()
-    val ny = y.numElements()
-    var i = 0; var j = 0; var c = 0L
-    while (i < nx && j < ny) {
-      val xv = x.getLong(i); val yv = y.getLong(j)
-      if (xv == yv) { c += 1; i += 1; j += 1 }
-      else if (xv < yv) i += 1
-      else j += 1
-    }
-    c
-  }
+  override protected def nullSafeEval(a: Any, b: Any): Any =
+    SortedLongArrayIntersectSize.count(a.asInstanceOf[ArrayData],
+      b.asInstanceOf[ArrayData])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (a, b) => {
@@ -83,6 +72,22 @@ case class SortedLongArrayIntersectSize(left: Expression, right: Expression)
 }
 
 object SortedLongArrayIntersectSize {
+  /** The merge walk itself (the interpreted form; driver-side callers
+    * use it directly on collected arrays).
+    */
+  def count(x: ArrayData, y: ArrayData): Long = {
+    val nx = x.numElements()
+    val ny = y.numElements()
+    var i = 0; var j = 0; var c = 0L
+    while (i < nx && j < ny) {
+      val xv = x.getLong(i); val yv = y.getLong(j)
+      if (xv == yv) { c += 1; i += 1; j += 1 }
+      else if (xv < yv) i += 1
+      else j += 1
+    }
+    c
+  }
+
   /** Column-level API: |a ∩ b| for sorted distinct long arrays. */
   def apply(a: Column, b: Column): Column =
     ColumnBridge.column(

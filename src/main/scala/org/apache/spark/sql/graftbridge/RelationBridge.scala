@@ -21,7 +21,8 @@ object RelationBridge {
     df.queryExecution.executedPlan.executeCollect()
 
   /** A DataFrame over a driver-held LocalRelation with the given
-    * schema — the broadcast-build over it runs no job.
+    * schema. Planning over it runs no job; a broadcast exchange built
+    * over it still runs one (the build collects through an RDD).
     */
   def localDf(spark: SparkSession, schema: StructType,
               rows: Seq[InternalRow]): DataFrame =

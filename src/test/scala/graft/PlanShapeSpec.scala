@@ -256,12 +256,56 @@ class PlanShapeSpec extends SparkSpec {
     assert("Exchange".r.findAllIn(p).size <= 3, p)
   }
 
-  test("q_corpus_pipeline: the capstone's surviving plan keeps the " +
-       "canonical broadcast join and at most dedup+sort exchanges") {
+  test("q_corpus_pipeline: the capstone's surviving plan drops the " +
+       "non-canonical ids with a literal-set filter — no join, at most " +
+       "spread+sort exchanges") {
+    // the dedup stage resolves on the driver at this size: the pair
+    // pipeline, the components and the canonical re-join are all gone
+    // from the plan, and the dropped ids filter the corpus scan
     val p = plan("q_corpus_pipeline")
-    assert("BroadcastHashJoin .*LeftOuter".r.findFirstIn(p).isDefined, p)
-    assert(!p.contains("SortMergeJoin") && !p.contains("CartesianProduct"), p)
-    assert("Exchange".r.findAllIn(p).size <= 3, p)
+    assert(p.contains("INSET"), p)
+    assert(!p.contains("Join") && !p.contains("CartesianProduct"), p)
+    assert("Exchange".r.findAllIn(p).size <= 2, p)
+  }
+
+  test("curation dedup stage over a 1,000-doc corpus: at most 2 jobs " +
+       "from applyStage until its frame is collected, the driver-tier " +
+       "collect labelled") {
+    import org.apache.spark.sql.functions._
+    import org.apache.spark.scheduler._
+    import graft.engine.CurationPipeline.{Stage, applyStage}
+    // 250 near-dup groups of 4: copies differ in their last word only
+    // (jaccard 9 / 11 over word trigrams)
+    val dir = java.nio.file.Files.createTempDirectory("graft_dedup_jobs")
+      .toString + "/docs"
+    spark.range(1000).select(col("id").as("doc_id"),
+        concat_ws(" ", transform(sequence(lit(1), lit(12)), i =>
+          when(i === 12, concat(lit("m"), col("id")))
+            .otherwise(concat(lit("g"), col("id") / 4 cast "long",
+              lit("w"), i)))).as("text"))
+      .coalesce(1).write.parquet(dir)
+    val docs = spark.read.parquet(dir)
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        jobs.add(Option(j.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description")))
+          .getOrElse(""))
+    }
+    org.apache.spark.graftbridge.ListenerBridge.waitUntilEmpty(sc)
+    sc.addSparkListener(listener)
+    val kept =
+      try applyStage(docs, Stage("dedup",
+          Map("tau" -> Double.box(0.5), "k" -> Int.box(3)))).collect()
+      finally {
+        org.apache.spark.graftbridge.ListenerBridge.waitUntilEmpty(sc)
+        sc.removeSparkListener(listener)
+      }
+    assert(kept.length == 250)
+    val labels = jobs.asScala.toSeq
+    assert(labels.size <= 2, labels)
+    assert(labels.count(_ == "graft.dedup: driver tier collect") == 1, labels)
   }
 
   test("q_source_quota: per-source cap is a two-phase bounded-heap " +

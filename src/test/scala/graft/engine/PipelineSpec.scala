@@ -267,7 +267,9 @@ class PipelineSpec extends SparkSpec with TimeLimits {
     val got = CurationPipeline.run(spark, cfg.pipeline.get)
       .select("doc_id", "lang", "n_tok").orderBy("doc_id")
       .collect().toSeq
-    // hand-composed: the exact q_corpus_pipeline body (SparkEntry)
+    // hand-composed: the q_corpus_pipeline body (SparkEntry) with its
+    // dedup spelled as the distributed keepCanonical(jaccardPairs), so
+    // the config's driver-tier dedup stage is checked against it
     import graft.operators.{Dedup, Sampling, TextAnalysis}
     val docs = spark.read.parquet(sf() + "/documents.parquet")
     val deduped = Dedup.keepCanonical(docs,

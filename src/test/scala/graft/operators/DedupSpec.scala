@@ -643,4 +643,101 @@ class DedupSpec extends SparkSpec {
     // rows on either path; both shards must still be represented
     assert(metaIds.exists(_ < 300) && metaIds.exists(id => id >= 300 && id < 450))
   }
+
+  /** The dedup stage's law: the driver tier (bound forced above the
+    * corpus) equals the distributed path (bound forced below it), and
+    * both equal the composition `keepCanonical(jaccardPairs)` — every
+    * column of every kept row.
+    */
+  private def assertDedupLaw(corpus: org.apache.spark.sql.DataFrame,
+                             taus: Seq[Double], k: Int = 3): Unit =
+    for (tau <- taus) {
+      def rows(df: org.apache.spark.sql.DataFrame) =
+        df.collect().map(_.toString).sorted.toSeq
+      val driver = rows(Dedup.keepCanonicalJaccard(corpus, tau, k, "doc_id",
+        driverDocs = Int.MaxValue))
+      val distributed = rows(Dedup.keepCanonicalJaccard(corpus, tau, k,
+        "doc_id", driverDocs = -1L))
+      val composed = rows(Dedup.keepCanonical(corpus,
+        Dedup.jaccardPairs(corpus, tau, k)))
+      assert(driver == distributed, s"tau=$tau")
+      assert(distributed == composed, s"tau=$tau")
+    }
+
+  test("keepCanonicalJaccard: driver tier == distributed path on the " +
+       "fixtures (gate forced both ways)") {
+    assertDedupLaw(docs, Seq(0.0, 0.3, 0.5, 0.9, 1.0))
+    val corpus = spark.read.parquet(s"${sf()}/documents.parquet")
+    assertDedupLaw(corpus, Seq(0.3, 0.5))
+    assertDedupLaw(corpus, Seq(0.3), k = 2)
+    // a mutated small-vocabulary corpus: many pairs over a wide spread of
+    // jaccards, chains of near-dups that merge into one component
+    val rng = new scala.util.Random(11)
+    val base = Array.fill(40)(Array.fill(12)(s"w${rng.nextInt(30)}"))
+    val mutated = (0 until 400).map { i =>
+      val words = base(i % 40).clone()
+      (0 until rng.nextInt(6)).foreach(_ =>
+        words(rng.nextInt(words.length)) = s"w${rng.nextInt(30)}")
+      (i.toLong * 7 % 401, words.mkString(" "))
+    }.toDF("doc_id", "text")
+    assertDedupLaw(mutated, Seq(0.2, 0.3, 0.5, 0.8))
+  }
+
+  test("keepCanonicalJaccard: driver tier == distributed path on NULL " +
+       "text, NULL ids, a repeated doc_id, a pair at exactly tau and an " +
+       "empty corpus") {
+    val edge = Seq[(java.lang.Long, String)](
+      (1L, "a b c d e f g h"),
+      // jaccard 3 / 10 = 0.3 exactly against doc 1 (6 and 7 shingles)
+      (2L, "a b c d e z1 z2 z3 z4"),
+      (3L, null),
+      (4L, "p q r s t u"),
+      // NULL id near-dup of doc 4: pairs nothing, kept by neither path
+      (null, "p q r s t u"),
+      (null, null),
+      // repeated id, different set sizes: one near-dup of doc 4, one of
+      // nothing
+      (5L, "p q r s t u v"),
+      (5L, "m n o"),
+      // repeated id, equal set sizes (the driver tier declines these)
+      (6L, "k l m n o"),
+      (6L, "k l m n x"),
+      (7L, "k l m n o"),
+      (8L, ""),
+      (9L, "tiny")
+    ).toDF("doc_id", "text")
+    val noSix = edge.filter(col("doc_id").isNull || col("doc_id") =!= 6L)
+    assertDedupLaw(edge, Seq(0.3, 0.5))
+    assertDedupLaw(noSix, Seq(0.3, 0.5))
+    def ids(df: org.apache.spark.sql.DataFrame) =
+      df.select("doc_id").as[java.lang.Long].collect().toSet
+    // doc 4 survives its NULL-id copy; the pair at exactly tau merges
+    // doc 2 into doc 1 at 0.3, and not above it
+    assert(ids(Dedup.keepCanonicalJaccard(noSix, 0.3)) ==
+      Set[java.lang.Long](1L, 3L, 4L, 8L, 9L))
+    assert(ids(Dedup.keepCanonicalJaccard(noSix, 0.31)).contains(2L))
+    assertDedupLaw(edge.limit(0), Seq(0.3))
+  }
+
+  test("keepCanonicalJaccard: the gate admits SmallCorpusDocs documents " +
+       "to the driver tier and sends one more to the distributed path") {
+    // docs 2i and 2i+1 share one of three shingles: jaccard 1/3
+    def corpus(n: Long) = spark.range(n).select(col("id").as("doc_id"),
+      concat(lit("x"), col("id") / 2 cast "long", lit(" y"),
+        col("id") / 2 cast "long", lit(" z"), col("id") / 2 cast "long",
+        lit(" q"), col("id") % 2).as("text"))
+    def plan(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.executedPlan.toString
+    val atGate = Dedup.keepCanonicalJaccard(corpus(Dedup.SmallCorpusDocs), 0.3)
+    assert(plan(atGate).contains("INSET") && !plan(atGate).contains("Join"),
+      plan(atGate))
+    val past = corpus(Dedup.SmallCorpusDocs + 1)
+    val overGate = Dedup.keepCanonicalJaccard(past, 0.3)
+    assert(!plan(overGate).contains("INSET") &&
+      plan(overGate).contains("LeftOuter"), plan(overGate))
+    val want = Dedup.keepCanonical(past, Dedup.jaccardPairs(past, 0.3))
+    assert(overGate.count() == (Dedup.SmallCorpusDocs + 2) / 2 &&
+      overGate.exceptAll(want).isEmpty && want.exceptAll(overGate).isEmpty)
+    assertDedupLaw(past, Seq(0.3))
+  }
 }
