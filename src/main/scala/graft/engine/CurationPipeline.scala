@@ -173,9 +173,11 @@ object CurationPipeline {
       df.join(kept, Seq(id), "left_semi")
     case "dedup" =>
       // near-dup keep-canonical (jaccard pairs -> components -> min id);
-      // eager: a corpus within Dedup.SmallCorpusDocs is resolved on the
-      // driver from one collect, a larger one takes the distributed
-      // pair pipeline
+      // eager: a corpus within Dedup.SmallCorpusDocs (and its heap share)
+      // is resolved on the driver from one collect and returns its kept
+      // rows as a local relation, so the upstream stages run once and
+      // the narrow stages after it run no job; a larger one takes the
+      // distributed pair pipeline
       graft.operators.Dedup.keepCanonicalJaccard(df,
         tau = st.dbl("tau", 0.3), k = st.int("k", 3),
         id = st.str("id", "doc_id"))

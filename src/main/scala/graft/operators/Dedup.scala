@@ -2,9 +2,12 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+import org.apache.spark.sql.catalyst.expressions.{BoundReference,
+  UnsafeArrayData, UnsafeProjection}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.RelationBridge
+import org.apache.spark.sql.types.{ByteType, IntegerType, LongType,
+  ShortType}
 import graft.functions.StableHash._
 import graft.operators.TextAnalysis.shingleHashes
 
@@ -576,9 +579,19 @@ object Dedup {
     *
     * The same bound admits [[keepCanonicalJaccard]]'s driver tier: at or
     * under it the whole near-dup keep-canonical runs on the driver from
-    * one collect of (id, shingle set), and the collect is the gate.
+    * one collect of the rows with their (id, shingle set), and the
+    * collect is the gate. That tier holds the rows' payload too, so it
+    * also needs the corpus's optimizer size estimate within
+    * [[SmallCorpusHeapShare]] of the driver heap, checked before the
+    * collect.
     */
   private[operators] val SmallCorpusDocs = 10000L
+
+  /** [[keepCanonicalJaccard]]'s driver tier admits a corpus whose
+    * optimizer size estimate is at most `maxMemory / SmallCorpusHeapShare`
+    * of the driver JVM.
+    */
+  private[operators] val SmallCorpusHeapShare = 16L
 
   /** Corpus size past which [[semanticDedup]] auto-routes to the
     * two-level quantizer. Measured basis (PLANS.md r8, 48 GB heap):
@@ -599,9 +612,11 @@ object Dedup {
     */
   val SemanticSampleFactor = 50
 
-  private def jaccardPairsFromSets(sets: DataFrame, tau: Double,
+  private def jaccardPairsFromSets(idSets: DataFrame, tau: Double,
                                    maxPostings: Int,
                                    docCount: Long): DataFrame = {
+    // the pair kernels take long ids; an int id column widens here
+    val sets = idSets.withColumn("doc_id", col("doc_id").cast("long"))
     if (docCount <= SmallCorpusDocs)
       return jaccardPairsFromSetsNaive(sets, tau, maxPostings)
     val (sumDf2, sumDf) = postingStats(sets)
@@ -1542,56 +1557,81 @@ object Dedup {
     * with the pairs taken over `id`. This is the curation pipeline's
     * `dedup` stage.
     *
-    * Corpora of at most [[SmallCorpusDocs]] documents run on the driver:
-    * ONE job collects (id, shingle hash set), and that job is also the
-    * size gate (`coalesce(1).limit(SmallCorpusDocs + 1)` stops reading
-    * past the bound). The pairs are found with the AllPairs prefix
-    * filter and an exact sorted-set intersect, the components with the
-    * min-root union-find, and the non-canonical ids return as a literal
-    * set that filters the corpus — the whole pair pipeline, edge
-    * checkpoint and canonical re-join (about 19 jobs on a 1,000-doc
-    * corpus) collapse into the collect. The call is eager: the collect
+    * Corpora of at most [[SmallCorpusDocs]] documents whose size
+    * estimate is within `1 / SmallCorpusHeapShare` of the driver heap
+    * run on the driver: ONE
+    * job collects every row's own columns with its id as a long and its
+    * shingle hash set, and that job is also the size gate
+    * (`coalesce(1).limit(SmallCorpusDocs + 1)` stops reading past the
+    * bound). The pairs are found with the AllPairs prefix filter and an
+    * exact sorted-set intersect, the components with the min-root
+    * union-find, and the surviving rows return as a local relation with
+    * `docs`' schema — the pair pipeline, edge checkpoint and canonical
+    * re-join collapse into the collect, and the corpus's upstream plan
+    * (scan, exact-dedup shuffle) runs once: later narrow stages fold onto
+    * the local relation and run no job. The call is eager: the collect
     * runs when it is made. NULL ids are dropped, as `keepCanonical`
     * drops them.
     *
-    * Larger corpora take the distributed composition unchanged; the
-    * gate's row count is the lower bound its own size gate reads, so no
-    * separate count job runs.
+    * Larger corpora take the distributed composition unchanged, and so
+    * do ids of a non-integral type: the driver tier compares ids by
+    * their long cast, which is the distributed join's comparison only
+    * for integral ids. Past the row gate the collect's row count is the
+    * lower bound the pair path's own size gate reads, so no separate
+    * count job runs.
     */
   def keepCanonicalJaccard(docs: DataFrame, tau: Double, k: Int = 3,
                            id: String = "doc_id"): DataFrame =
-    keepCanonicalJaccard(docs, tau, k, id, SmallCorpusDocs)
+    keepCanonicalJaccard(docs, tau, k, id, SmallCorpusDocs,
+      Runtime.getRuntime.maxMemory / SmallCorpusHeapShare)
 
-  /** [[keepCanonicalJaccard]] with the driver-tier bound as a parameter
-    * (the law tests force either path with it).
+  /** [[keepCanonicalJaccard]] with the driver-tier bounds as parameters
+    * (the law tests force either path with them).
     */
   private[operators] def keepCanonicalJaccard(docs: DataFrame, tau: Double,
-      k: Int, id: String, driverDocs: Long): DataFrame = {
-    val sets = docs.select(col(id).cast("long").as("doc_id"),
-      shingleHashes(col("text"), k).as("sh"))
+      k: Int, id: String, driverDocs: Long, driverBytes: Long): DataFrame = {
+    def distributed(docCount: Long): DataFrame =
+      keepCanonical(docs, jaccardPairsFromSets(
+        graft.engine.Spread(docs).select(col(id).as("doc_id"),
+          shingleHashes(col("text"), k).as("sh")),
+        tau, maxPostings = 0, docCount = docCount), id)
+    val integralId = docs.select(col(id)).schema.head.dataType match {
+      case ByteType | ShortType | IntegerType | LongType => true
+      case _ => false
+    }
+    // the size estimate runs no job (Spread reads the same one)
+    if (!integralId ||
+        docs.queryExecution.optimizedPlan.stats.sizeInBytes > driverBytes)
+      return distributed(corpusCount(docs, -1L))
+    // docs' own columns, then (id as long, shingle set)
+    val at = docs.schema.length
     val gate = math.min(driverDocs, Int.MaxValue - 1L).toInt + 1
     val rows = labeled(docs, "graft.dedup: driver tier collect") {
-      RelationBridge.collectInternal(sets.coalesce(1).limit(gate))
+      RelationBridge.collectInternal(docs.select(col("*"),
+          col(id).cast("long"), shingleHashes(col("text"), k))
+        .coalesce(1).limit(gate))
     }
     val dropped =
-      if (rows.length > driverDocs) None else droppedIdsLocal(rows, tau)
+      if (rows.length > driverDocs) None else droppedIdsLocal(rows, at, tau)
     dropped match {
       case Some(ids) =>
-        // a literal set, not a broadcast join: building a broadcast of
-        // even a local relation runs a job, a filter runs none
-        val kept = graft.engine.Spread(docs).filter(col(id).isNotNull)
-        if (ids.isEmpty) kept else kept.filter(!col(id).isin(ids.toSeq: _*))
-      case None =>
-        keepCanonical(docs, jaccardPairsFromSets(
-          graft.engine.Spread(docs).select(col(id).as("doc_id"),
-            shingleHashes(col("text"), k).as("sh")),
-          tau, maxPostings = 0, docCount = rows.length.toLong), id)
+        // an integral id's long cast compares as `isin` on the id would
+        val payload = UnsafeProjection.create(
+          docs.schema.fields.toSeq.zipWithIndex.map { case (f, i) =>
+            BoundReference(i, f.dataType, f.nullable) })
+        val kept = rows.iterator
+          .filter(r => !r.isNullAt(at) &&
+            java.util.Arrays.binarySearch(ids, r.getLong(at)) < 0)
+          .map(r => payload(r).copy(): InternalRow).toSeq
+        RelationBridge.localDf(docs.sparkSession, docs.schema, kept)
+      case None => distributed(rows.length.toLong)
     }
   }
 
-  /** Driver tier of [[keepCanonicalJaccard]]: from collected
-    * (id, shingle set) rows, the ids `keepCanonical` drops — every
-    * paired id that is not its component's minimum — sorted.
+  /** Driver tier of [[keepCanonicalJaccard]]: from collected rows
+    * holding (id, shingle set) at ordinals (`at`, `at + 1`), the ids
+    * `keepCanonical` drops — every paired id that is not its
+    * component's minimum — sorted.
     *
     * Pairs are exactly the naive path's: per-row sets, pairs of rows
     * with different ids sharing a shingle, kept when
@@ -1610,14 +1650,14 @@ object Dedup {
     * which a per-row-pair method does not reproduce; the caller falls
     * back to the distributed path.
     */
-  private def droppedIdsLocal(rows: Array[InternalRow],
+  private def droppedIdsLocal(rows: Array[InternalRow], at: Int,
                               tau: Double): Option[Array[Long]] = {
     // NULL ids and NULL or empty sets take part in no pair
-    val live = rows.filter(r => !r.isNullAt(0) && !r.isNullAt(1) &&
-      r.getArray(1).numElements() > 0)
-    val ids = live.map(_.getLong(0))
+    val live = rows.filter(r => !r.isNullAt(at) && !r.isNullAt(at + 1) &&
+      r.getArray(at + 1).numElements() > 0)
+    val ids = live.map(_.getLong(at))
     val sets = live.map { r =>
-      val a = r.getArray(1).toLongArray(); java.util.Arrays.sort(a); a
+      val a = r.getArray(at + 1).toLongArray(); java.util.Arrays.sort(a); a
     }
     val keys = ids.indices.map(i => (ids(i), sets(i).length))
     if (keys.distinct.size < keys.size) return None

@@ -21,8 +21,10 @@ object RelationBridge {
     df.queryExecution.executedPlan.executeCollect()
 
   /** A DataFrame over a driver-held LocalRelation with the given
-    * schema. Planning over it runs no job; a broadcast exchange built
-    * over it still runs one (the build collects through an RDD).
+    * schema. Planning over it runs no job, and narrow Project/Filter
+    * stages on top fold into it (`ConvertToLocalRelation`), so
+    * collecting them runs none either; a broadcast exchange built over
+    * it still runs one (the build collects through an RDD).
     */
   def localDf(spark: SparkSession, schema: StructType,
               rows: Seq[InternalRow]): DataFrame =

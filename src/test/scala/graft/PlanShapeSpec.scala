@@ -256,23 +256,24 @@ class PlanShapeSpec extends SparkSpec {
     assert("Exchange".r.findAllIn(p).size <= 3, p)
   }
 
-  test("q_corpus_pipeline: the capstone's surviving plan drops the " +
-       "non-canonical ids with a literal-set filter — no join, at most " +
-       "spread+sort exchanges") {
+  test("q_corpus_pipeline: the capstone's surviving plan is the sort " +
+       "over a local relation of the dedup stage's kept rows — no file " +
+       "scan, no join, at most the sort's exchange") {
     // the dedup stage resolves on the driver at this size: the pair
-    // pipeline, the components and the canonical re-join are all gone
-    // from the plan, and the dropped ids filter the corpus scan
+    // pipeline, the components and the canonical re-join are gone from
+    // the plan, and so is the corpus scan — the kept rows are a local
+    // relation that the gate, normalize and sample fold onto
     val p = plan("q_corpus_pipeline")
-    assert(p.contains("INSET"), p)
+    assert(p.contains("LocalTableScan"), p)
+    assert(!p.contains("FileScan") && !p.contains("Scan parquet"), p)
     assert(!p.contains("Join") && !p.contains("CartesianProduct"), p)
-    assert("Exchange".r.findAllIn(p).size <= 2, p)
+    assert("Exchange".r.findAllIn(p).size <= 1, p)
   }
 
-  test("curation dedup stage over a 1,000-doc corpus: at most 2 jobs " +
-       "from applyStage until its frame is collected, the driver-tier " +
-       "collect labelled") {
+  test("curation dedup stage over a 1,000-doc corpus: one job from " +
+       "applyStage until its frame is collected, the labelled driver-tier " +
+       "collect") {
     import org.apache.spark.sql.functions._
-    import org.apache.spark.scheduler._
     import graft.engine.CurationPipeline.{Stage, applyStage}
     // 250 near-dup groups of 4: copies differ in their last word only
     // (jaccard 9 / 11 over word trigrams)
@@ -285,27 +286,74 @@ class PlanShapeSpec extends SparkSpec {
               lit("w"), i)))).as("text"))
       .coalesce(1).write.parquet(dir)
     val docs = spark.read.parquet(dir)
-    val sc = spark.sparkContext
-    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        jobs.add(Option(j.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description")))
-          .getOrElse(""))
-    }
-    org.apache.spark.graftbridge.ListenerBridge.waitUntilEmpty(sc)
-    sc.addSparkListener(listener)
-    val kept =
-      try applyStage(docs, Stage("dedup",
-          Map("tau" -> Double.box(0.5), "k" -> Int.box(3)))).collect()
-      finally {
-        org.apache.spark.graftbridge.ListenerBridge.waitUntilEmpty(sc)
-        sc.removeSparkListener(listener)
-      }
+    val (kept, jobs) = withJobLabels(applyStage(docs, Stage("dedup",
+      Map("tau" -> Double.box(0.5), "k" -> Int.box(3)))).collect())
     assert(kept.length == 250)
-    val labels = jobs.asScala.toSeq
-    assert(labels.size <= 2, labels)
-    assert(labels.count(_ == "graft.dedup: driver tier collect") == 1, labels)
+    // collecting the returned local relation runs nothing
+    assert(jobs == Seq("graft.dedup: driver tier collect"), jobs)
+  }
+
+  test("curation pipeline over a 1,000-doc parquet corpus with exact " +
+       "duplicates: at most 4 jobs, none after the dedup stage's " +
+       "driver-tier collect, none when the output is collected") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    import graft.engine.{CurationPipeline, SourceFormat}
+    import graft.engine.CurationPipeline.Stage
+    // the load benchmark's corpus shape: 25 exact and 25 near-duplicate
+    // groups, 20 short and 20 blocklisted documents, random filler
+    val r = new scala.util.Random(7)
+    val vocab = Array.tabulate(3000)(i => s"w$i")
+    def sentence(n: Int) = Array.fill(n)(vocab(r.nextInt(vocab.length)))
+    val texts = scala.collection.mutable.ArrayBuffer.empty[Array[String]]
+    for (_ <- 0 until 25) {
+      val base = sentence(25 + r.nextInt(35))
+      (0 until 2 + r.nextInt(2)).foreach(_ => texts += base.clone())
+    }
+    for (_ <- 0 until 25) {
+      val base = sentence(40 + r.nextInt(20))
+      texts += base
+      (0 until 1 + r.nextInt(2)).foreach { _ =>
+        val v = base.clone(); v(r.nextInt(v.length)) = "swapped"; texts += v
+      }
+    }
+    (0 until 20).foreach(_ => texts += sentence(2 + r.nextInt(4)))
+    (0 until 20).foreach { _ =>
+      val w = sentence(20 + r.nextInt(30)); w(0) = "casinobonus"; texts += w
+    }
+    while (texts.length < 1000) texts += sentence(15 + r.nextInt(60))
+    val langs = Array("en", "en", "en", "de", "fr", "es")
+    val rows = texts.zipWithIndex.map { case (t, i) =>
+      Row(1000L + i * 7L, langs(r.nextInt(langs.length)), t.mkString(" "))
+    }
+    val dir = java.nio.file.Files.createTempDirectory("graft_curate_jobs")
+      .toString + "/docs"
+    spark.createDataFrame(spark.sparkContext.parallelize(rows.toSeq, 4),
+        StructType(Seq(StructField("doc_id", LongType),
+          StructField("lang", StringType), StructField("text", StringType))))
+      .write.parquet(dir)
+    val cfg = CurationPipeline.Config(source = dir,
+      format = Some(SourceFormat.Parquet), target = "curated", stages = Seq(
+        Stage("exact_dedup", Map.empty),
+        Stage("dedup", Map("tau" -> Double.box(0.5), "k" -> Int.box(3))),
+        Stage("quality_gate",
+          Map("min_tokens" -> Int.box(8), "max_tokens" -> Int.box(200))),
+        Stage("blocklist",
+          Map("patterns" -> java.util.List.of("casinobonus"))),
+        Stage("sample", Map(
+          "rates" -> java.util.Map.of("en", Int.box(7)),
+          "default_num" -> Int.box(5), "den" -> Int.box(10)))))
+    val (out, staged) = withJobLabels(CurationPipeline.run(spark, cfg))
+    val (ids, collected) = withJobLabels(
+      out.select("doc_id").collect().map(_.getLong(0)))
+    assert(ids.nonEmpty && ids.distinct.length == ids.length)
+    // the last job is the dedup stage's (AQE's exchange jobs carry its
+    // label too; the parquet schema probe runs before it): the stages
+    // after it fold onto the local relation, and collecting runs nothing
+    assert(staged.size <= 4, staged)
+    assert(staged.lastOption.contains("graft.dedup: driver tier collect"),
+      staged)
+    assert(collected.isEmpty, collected)
   }
 
   test("q_source_quota: per-source cap is a two-phase bounded-heap " +

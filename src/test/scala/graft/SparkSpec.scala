@@ -9,6 +9,32 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
   def sf(dir: String = "sf0.001"): String = s"/root/testdata/$dir"
+
+  /** `f`'s result with the description (`spark.job.description`, empty
+    * when unset) of every Spark job that started while it ran.
+    */
+  def withJobLabels[A](f: => A): (A, Seq[String]) = {
+    import org.apache.spark.graftbridge.ListenerBridge.waitUntilEmpty
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        jobs.add(Option(j.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description")))
+          .getOrElse(""))
+    }
+    waitUntilEmpty(sc)
+    sc.addSparkListener(listener)
+    val out =
+      try f
+      finally {
+        waitUntilEmpty(sc)
+        sc.removeSparkListener(listener)
+      }
+    import scala.jdk.CollectionConverters._
+    (out, jobs.asScala.toSeq)
+  }
 }
 
 object SparkSpec {

@@ -644,25 +644,42 @@ class DedupSpec extends SparkSpec {
     assert(metaIds.exists(_ < 300) && metaIds.exists(id => id >= 300 && id < 450))
   }
 
-  /** The dedup stage's law: the driver tier (bound forced above the
-    * corpus) equals the distributed path (bound forced below it), and
-    * both equal the composition `keepCanonical(jaccardPairs)` — every
-    * column of every kept row.
+  /** The dedup stage's law: the driver tier (bounds forced above the
+    * corpus) equals the distributed path (row bound forced below it),
+    * and both equal the composition `keepCanonical(jaccardPairs)` —
+    * every column of every kept row, under an equal schema (names,
+    * types, nullability).
     */
   private def assertDedupLaw(corpus: org.apache.spark.sql.DataFrame,
                              taus: Seq[Double], k: Int = 3): Unit =
     for (tau <- taus) {
-      def rows(df: org.apache.spark.sql.DataFrame) =
-        df.collect().map(_.toString).sorted.toSeq
-      val driver = rows(Dedup.keepCanonicalJaccard(corpus, tau, k, "doc_id",
-        driverDocs = Int.MaxValue))
-      val distributed = rows(Dedup.keepCanonicalJaccard(corpus, tau, k,
-        "doc_id", driverDocs = -1L))
-      val composed = rows(Dedup.keepCanonical(corpus,
-        Dedup.jaccardPairs(corpus, tau, k)))
-      assert(driver == distributed, s"tau=$tau")
-      assert(distributed == composed, s"tau=$tau")
+      val driverDf = Dedup.keepCanonicalJaccard(corpus, tau, k, "doc_id",
+        driverDocs = Int.MaxValue, driverBytes = Long.MaxValue)
+      val distributedDf = Dedup.keepCanonicalJaccard(corpus, tau, k,
+        "doc_id", driverDocs = -1L, driverBytes = Long.MaxValue)
+      val composedDf = Dedup.keepCanonical(corpus,
+        Dedup.jaccardPairs(corpus, tau, k))
+      assert(driverDf.schema == composedDf.schema, s"tau=$tau")
+      assert(distributedDf.schema == composedDf.schema, s"tau=$tau")
+      val driver = canonicalRows(driverDf)
+      assert(driver == canonicalRows(distributedDf), s"tau=$tau")
+      assert(driver == canonicalRows(composedDf), s"tau=$tau")
     }
+
+  /** Collected rows as sorted strings that compare by value: binary
+    * columns print their bytes and maps their sorted entries.
+    */
+  private def canonicalRows(df: org.apache.spark.sql.DataFrame): Seq[String] = {
+    def canon(v: Any): Any = v match {
+      case b: Array[Byte] => b.toSeq
+      case r: org.apache.spark.sql.Row => r.toSeq.map(canon)
+      case m: scala.collection.Map[_, _] =>
+        m.toSeq.map { case (a, b) => (canon(a), canon(b)) }.sortBy(_.toString)
+      case xs: scala.collection.Seq[_] => xs.map(canon)
+      case o => o
+    }
+    df.collect().map(canon(_).toString).sorted.toSeq
+  }
 
   test("keepCanonicalJaccard: driver tier == distributed path on the " +
        "fixtures (gate forced both ways)") {
@@ -728,16 +745,91 @@ class DedupSpec extends SparkSpec {
         lit(" q"), col("id") % 2).as("text"))
     def plan(df: org.apache.spark.sql.DataFrame) =
       df.queryExecution.executedPlan.toString
+    // at the gate the kept rows are a local relation: no scan of the
+    // source, no join
     val atGate = Dedup.keepCanonicalJaccard(corpus(Dedup.SmallCorpusDocs), 0.3)
-    assert(plan(atGate).contains("INSET") && !plan(atGate).contains("Join"),
-      plan(atGate))
+    val atPlan = plan(atGate)
+    assert(atPlan.contains("LocalTableScan") && !atPlan.contains("Range") &&
+      !atPlan.contains("FileScan") && !atPlan.contains("Join"), atPlan)
     val past = corpus(Dedup.SmallCorpusDocs + 1)
     val overGate = Dedup.keepCanonicalJaccard(past, 0.3)
-    assert(!plan(overGate).contains("INSET") &&
+    assert(plan(overGate).contains("Range") &&
       plan(overGate).contains("LeftOuter"), plan(overGate))
     val want = Dedup.keepCanonical(past, Dedup.jaccardPairs(past, 0.3))
     assert(overGate.count() == (Dedup.SmallCorpusDocs + 2) / 2 &&
       overGate.exceptAll(want).isEmpty && want.exceptAll(overGate).isEmpty)
     assertDedupLaw(past, Seq(0.3))
+  }
+
+  test("keepCanonicalJaccard: driver tier == keepCanonical(jaccardPairs) " +
+       "row for row on a wide corpus (nested, decimal, timestamp, binary " +
+       "columns, NULL payloads, a dotted column name, an int id) and " +
+       "with a fractional id") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq(
+      StructField("doc_id", IntegerType),
+      StructField("text", StringType),
+      StructField("tags", ArrayType(StringType)),
+      StructField("attrs", MapType(StringType, LongType)),
+      StructField("meta", StructType(Seq(StructField("src", StringType),
+        StructField("score", DoubleType, nullable = false)))),
+      StructField("price", DecimalType(12, 3)),
+      StructField("seen", TimestampType),
+      StructField("raw", BinaryType),
+      StructField("a.b", StringType, nullable = false)))
+    val texts = Seq("a b c d e f g h", "a b c d e f g x", "p q r s t u",
+      "p q r s t v", "m n o", null, "a b c d e f g h", "z y x w v u")
+    val rows = texts.zipWithIndex.map { case (t, i) =>
+      def orNull[A](a: => A): Any = if (i % 3 == 1) null else a
+      Row(if (i == 4) null else Int.box(i + 10), t,
+        orNull(Seq(s"t$i", null)),
+        orNull(Map("n" -> Long.box(i), "m" -> null)),
+        orNull(Row(s"s$i", i * 0.5)),
+        orNull(new java.math.BigDecimal(s"$i.125")),
+        orNull(java.sql.Timestamp.valueOf(s"2024-01-0${i + 1} 10:00:00")),
+        orNull(Array[Byte](i.toByte, 0, -1)),
+        s"dot$i")
+    }
+    val wide = spark.createDataFrame(
+      spark.sparkContext.parallelize(rows, 3), schema)
+    assertDedupLaw(wide, Seq(0.3, 0.5, 1.0))
+    // the same rows from a parquet file: the driver tier's rows come
+    // from a file scan
+    val dir = java.nio.file.Files.createTempDirectory("graft_wide_dedup")
+      .toString + "/docs"
+    wide.write.parquet(dir)
+    assertDedupLaw(spark.read.parquet(dir), Seq(0.3))
+    // the default bounds admit the parquet corpus to the driver tier;
+    // it drops the near-dups of docs 10 and 12, doc 16 (an exact copy
+    // of doc 10) and the NULL id
+    val kept = Dedup.keepCanonicalJaccard(spark.read.parquet(dir), 0.5)
+    assert(!kept.queryExecution.executedPlan.toString.contains("FileScan"))
+    assert(kept.select("doc_id").as[Option[Int]].collect().toSet ==
+      Set(Some(10), Some(12), Some(15), Some(17)),
+      kept.select("doc_id").collect().toSeq)
+    // a fractional id: the driver tier compares ids by their long cast,
+    // under which 2.5 would fall with the dropped 2.0; the distributed
+    // join keeps it, and such ids take that path
+    val fractional = Seq((1.0, "a b c d e"), (2.0, "a b c d e"),
+      (2.5, "v w x y z q")).toDF("doc_id", "text")
+    assertDedupLaw(fractional, Seq(0.5))
+  }
+
+  test("keepCanonicalJaccard: a corpus over the driver byte budget takes " +
+       "the distributed path and returns identical rows") {
+    val corpus = spark.read.parquet(s"${sf()}/documents.parquet")
+    val (overBudget, labels) = withJobLabels(
+      Dedup.keepCanonicalJaccard(corpus, 0.3, 3, "doc_id",
+        driverDocs = Dedup.SmallCorpusDocs, driverBytes = 1L))
+    assert(!labels.contains("graft.dedup: driver tier collect"), labels)
+    val p = overBudget.queryExecution.executedPlan.toString
+    assert(p.contains("FileScan") && p.contains("LeftOuter"), p)
+    val driver = Dedup.keepCanonicalJaccard(corpus, 0.3, 3, "doc_id",
+      driverDocs = Dedup.SmallCorpusDocs, driverBytes = Long.MaxValue)
+    val q = driver.queryExecution.executedPlan.toString
+    assert(q.contains("LocalTableScan") && !q.contains("FileScan"), q)
+    assert(overBudget.schema == driver.schema)
+    assert(canonicalRows(overBudget) == canonicalRows(driver))
   }
 }
