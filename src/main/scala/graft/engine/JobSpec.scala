@@ -217,10 +217,6 @@ object EngineConfig {
     EngineConfig(jobs, sink, pipeline, maintenance)
   }
 
-  def fromYamlFile(path: String): EngineConfig =
-    fromYaml(new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(path)), java.nio.charset.StandardCharsets.UTF_8))
-
   /** Parse the REFERENCE'S OWN config format unchanged (GCS2Postgres
     * `config.yaml:1-25`: `postgres.*`, `gcs.{bucket_name, files[]}`,
     * `bq.{project_id, dataset, tables[]}`) — the drop-in migration path:

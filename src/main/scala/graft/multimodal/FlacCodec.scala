@@ -43,7 +43,6 @@ object FlacCodec {
   private final class BitReader(val bytes: Array[Byte], startByte: Int) {
     var pos: Long = startByte.toLong * 8 // absolute bit cursor
     def bytePos: Int = (pos >> 3).toInt
-    def bitsLeft: Long = bytes.length.toLong * 8 - pos
     def alignByte(): Unit = pos = (pos + 7) & ~7L
 
     /** n in [0, 32]; returns -1-free unsigned value in a Long. */

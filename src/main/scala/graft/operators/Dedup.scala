@@ -541,8 +541,20 @@ object Dedup {
     * two paths are property-proven identical (`DedupSpec`), so the
     * switch is invisible to results — the same decision pattern as
     * Spark's own runtime join-strategy re-plan, paid for with one extra
-    * scalar job per call.
+    * scalar job per call. Corpora of at most `SmallCorpusDocs` raw
+    * documents (`docCount`) take direct enumeration without that job.
+    *
+    * Returns None for direct enumeration, or the prefix path's verify
+    * side size hint (Σ df longs).
     */
+  private def prefixVerifyBytes(sets: DataFrame,
+                                docCount: Long): Option[Long] =
+    if (docCount <= SmallCorpusDocs) None
+    else {
+      val (sumDf2, sumDf) = postingStats(sets)
+      if (sumDf2 <= NaivePairBudget) None else Some(sumDf * 8L)
+    }
+
   /** Estimated (Σ df², Σ df) over the posting histogram — the runtime
     * statistics behind every naive-vs-prefix path choice.
     *
@@ -617,14 +629,10 @@ object Dedup {
                                    docCount: Long): DataFrame = {
     // the pair kernels take long ids; an int id column widens here
     val sets = idSets.withColumn("doc_id", col("doc_id").cast("long"))
-    if (docCount <= SmallCorpusDocs)
-      return jaccardPairsFromSetsNaive(sets, tau, maxPostings)
-    val (sumDf2, sumDf) = postingStats(sets)
-    if (sumDf2 <= NaivePairBudget)
-      jaccardPairsFromSetsNaive(sets, tau, maxPostings)
-    else
-      jaccardPairsFromSetsPrefix(sets, tau, maxPostings,
-        verifyBytesHint = Some(sumDf * 8L))
+    prefixVerifyBytes(sets, docCount) match {
+      case None => jaccardPairsFromSetsNaive(sets, tau, maxPostings)
+      case hint => jaccardPairsFromSetsPrefix(sets, tau, maxPostings, hint)
+    }
   }
 
   /** The direct pair pipeline (enumerates EVERY in-bucket pair); also
@@ -652,22 +660,19 @@ object Dedup {
     val sets = graft.engine.Spread(docs).select(col("doc_id"),
       shingleHashes(col("text"), k).as("sh"))
     // same runtime path choice as jaccardPairsFromSets (Σ df² ∝ n² on
-    // saturated vocabularies: 239M at sf1 word-trigrams); small corpora
-    // skip the stats job entirely, and the gate counts the RAW docs
-    // (no shingle re-tokenization)
-    val (sumDf2, sumDf) =
-      if (corpusCount(docs, -1L) <= SmallCorpusDocs) (0L, 0L)
-      else postingStats(sets)
-    if (sumDf2 <= NaivePairBudget)
-      overlapPairsFromSets(sets, maxPostings)
-        .withColumn("containment",
-          col("inter").cast("double") / least(col("n1"), col("n2")))
-        .filter(col("containment") >= tau)
-        .select(col("d1"), col("d2"), col("inter"), col("n1"), col("n2"),
-          col("containment"))
-    else
-      containmentPairsFromSetsPrefix(sets, tau, maxPostings,
-        verifyBytesHint = Some(sumDf * 8L))
+    // saturated vocabularies: 239M at sf1 word-trigrams); the gate counts
+    // the RAW docs (no shingle re-tokenization)
+    prefixVerifyBytes(sets, corpusCount(docs, -1L)) match {
+      case None =>
+        overlapPairsFromSets(sets, maxPostings)
+          .withColumn("containment",
+            col("inter").cast("double") / least(col("n1"), col("n2")))
+          .filter(col("containment") >= tau)
+          .select(col("d1"), col("d2"), col("inter"), col("n1"), col("n2"),
+            col("containment"))
+      case hint =>
+        containmentPairsFromSetsPrefix(sets, tau, maxPostings, hint)
+    }
   }
 
   /** Ensemble near-dup pairs: jaccard >= tauJ OR containment >= tauC
@@ -685,19 +690,18 @@ object Dedup {
                     k: Int = 3, maxPostings: Int = 0): DataFrame = {
     val sets = graft.engine.Spread(docs).select(col("doc_id"),
       shingleHashes(col("text"), k).as("sh"))
-    val (sumDf2, sumDf) =
-      if (corpusCount(docs, -1L) <= SmallCorpusDocs) (0L, 0L)
-      else postingStats(sets)
-    val overlap = if (sumDf2 <= NaivePairBudget)
-      overlapPairsFromSets(sets, maxPostings)
-        .filter(
-          (col("inter").cast("double") /
-            (col("n1") + col("n2") - col("inter")) >= tauJ) ||
-          (col("inter").cast("double") / least(col("n1"), col("n2")) >= tauC))
-        .select(col("d1"), col("d2"))
-    else
-      ensemblePairsFromSetsPrefix(sets, tauJ, tauC, maxPostings,
-        verifyBytesHint = Some(sumDf * 8L))
+    val overlap = prefixVerifyBytes(sets, corpusCount(docs, -1L)) match {
+      case None =>
+        overlapPairsFromSets(sets, maxPostings)
+          .filter(
+            (col("inter").cast("double") /
+              (col("n1") + col("n2") - col("inter")) >= tauJ) ||
+            (col("inter").cast("double") /
+              least(col("n1"), col("n2")) >= tauC))
+          .select(col("d1"), col("d2"))
+      case hint =>
+        ensemblePairsFromSetsPrefix(sets, tauJ, tauC, maxPostings, hint)
+    }
     // exact tier joins on the 8-byte text hash, not the document text —
     // the shuffle key stays constant-size at any document length; the
     // equality filter after the join removes (2^-60) hash collisions
@@ -894,21 +898,6 @@ object Dedup {
     // re-verifies once per shared band (≤ bands ×), which costs less
     // than shuffling every candidate for distinctness first
     if (dedup) pairs.dropDuplicates(outA, outB) else pairs
-  }
-
-  /** MinHash signatures as one codegen'd aggregation over the posting
-    * list: numPerms `min((a_i*(h mod p)+b_i) mod p)` aggregates. Constant
-    * numPerms longs per doc; partial (map-side) aggregation means the
-    * shuffle carries one signature row per doc per map task, not the
-    * posting list.
-    */
-  def minhashSignatures(posts: DataFrame, numPerms: Int): DataFrame = {
-    val p = MinhashPrime
-    val hm = col("h") % p
-    val aggs = (0 until numPerms).map { i =>
-      min((lit(permA(i)) * hm + lit(permB(i))) % p).as(s"sig_$i")
-    }
-    posts.groupBy(col("doc_id")).agg(aggs.head, aggs.tail: _*)
   }
 
   /** MinHash+LSH near-dup pairs: posting list -> signatures (one codegen
@@ -1374,11 +1363,7 @@ object Dedup {
     * which, so min-id components are preserved bit-for-bit.
     */
   def connectedComponents(pairs: DataFrame, maxIter: Int = 30,
-                          smallGraphThreshold: Long = 4000000L,
-                          // measurement escape hatch (Stress -ccdense):
-                          // skip contraction so the star-only baseline
-                          // is timeable; results are identical
-                          contraction: Boolean = true): DataFrame = {
+                          smallGraphThreshold: Long = 4000000L): DataFrame = {
     val spark = pairs.sparkSession
     // Both paths run over the SAME canonical edge set — unordered
     // (lo, hi), lo < hi, self-loops dropped, distinct — materialized once
@@ -1421,7 +1406,7 @@ object Dedup {
         }
         .toDF("a", "b")
     }
-    if (contraction && nEdges > smallGraphThreshold)
+    if (nEdges > smallGraphThreshold)
       labeled(pairs, "graft.cc: forest contraction") {
         // round 1: in place, zero shuffle — on dense graphs this alone
         // cuts edges to ~nodes per partition
@@ -1534,7 +1519,9 @@ object Dedup {
   /** Keep-one-per-cluster: canonical (minimum) doc per near-dup
     * component, plus every unpaired doc keeps itself. The complete
     * corpus-level dedup: pairs from any near-dup detector compose with
-    * this to produce the deduplicated corpus.
+    * this to produce the deduplicated corpus. The kept rows carry
+    * `docs`' columns in `docs`' order, as [[keepCanonicalJaccard]]'s
+    * driver tier returns them.
     */
   def keepCanonical(docs: DataFrame, pairs: DataFrame,
                     id: String = "doc_id"): DataFrame = {
@@ -1549,7 +1536,8 @@ object Dedup {
       .join(cc.withColumnRenamed("node", id), Seq(id), "left")
       .withColumn("component", coalesce(col("component"), col(id)))
       .filter(col(id) === col("component"))
-      .drop("component")
+      .select(docs.columns.toSeq.map(c =>
+        col("`" + c.replace("`", "``") + "`")): _*)
   }
 
   /** Near-dup keep-canonical over word k-shingle Jaccard in one call:

@@ -227,7 +227,8 @@ object Sampling {
     *   - every group fits a single task's sort (max n_g <=
     *     `windowMaxGroup`) → the window-rank form: one shuffle, one
     *     per-group sort. Measured 3× faster than radix at <=1M-row
-    *     groups (Stress -quantile, PLANS.md r9).
+    *     groups (PLANS.md r9; probe tool last present at commit
+    *     6989ace).
     *   - some group exceeds it → [[quantileThresholds]] radix
     *     selection + one broadcast-threshold filter: no task ever
     *     sorts the hot group. Measured 3× faster at an 18M-row hot

@@ -20,7 +20,8 @@ import org.apache.spark.sql.types._
   * `Sum(decimal(p,s))` buffers at decimal(p+10,s); precision > 18
   * buffers are BigDecimal-backed in the UnsafeRow, so every update is
   * a BigDecimal allocate-and-add (measured: 0.22 s double sums vs
-  * 0.63 s decimal sums for the same groupBy at sf0.1 — DecProbe).
+  * 0.63 s decimal sums for the same groupBy at sf0.1, by a probe tool
+  * last present at commit 6989ace; see PLANS.md "Removed probe tools").
   * Here the buffer is the exact 128-bit unscaled integer as two longs
   * (hi, lo) — two's-complement limb arithmetic, wrap-free for any
   * group under ~1.7e20 rows of max-magnitude values (five orders of

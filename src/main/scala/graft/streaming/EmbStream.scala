@@ -2,10 +2,9 @@ package graft.streaming
 
 import java.nio.file.{Files, Path, Paths}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
-import org.apache.spark.sql.types._
 
 /** Streaming embedding-pipeline surface: continuous ingest of embedding
   * shards with incremental semantic dedup — the embedding-side twin of
@@ -39,7 +38,8 @@ import org.apache.spark.sql.types._
   * identical (same frozen centroids, same tie rule), and the final
   * canonical table EQUALS [[graft.operators.Dedup.semanticDedupWith]]
   * (union, same centroids) — spec-locked in `EmbStreamSpec`, measured
-  * at sf1 by `StreamScale -emb`.
+  * at sf1 in PLANS.md "Streaming incremental embedding dedup at sf1"
+  * (probe tool last present at commit 6989ace).
   *
   * Durability ([[GenStore]]'s discipline, new r11 — the prior form
   * REQUIRED a fresh stateDir because the merge map lived only on the
@@ -57,21 +57,6 @@ import org.apache.spark.sql.types._
   * idempotent-sink contract); partial writes can never surface.
   */
 object EmbStream {
-
-  /** embeddings schema (FIXTURES.md) — streaming sources don't infer. */
-  val embeddingsSchema: StructType = StructType(Seq(
-    StructField("vec_id", LongType),
-    StructField("embedding", ArrayType(FloatType)),
-    StructField("label", IntegerType)))
-
-  /** Open the embeddings table as a file stream (same symlink-directory
-    * device as [[DocStream.readDocuments]]).
-    */
-  def readEmbeddings(spark: SparkSession, dir: String): DataFrame =
-    spark.readStream
-      .schema(embeddingsSchema)
-      .parquet(StreamDirs.fileStreamDir(dir, "embeddings.parquet",
-        "graft_embstream").toString)
 
   /** `baseline` is the canonical table the sink's deltas apply on top
     * of: the stored-corpus canon on a cold start, the WHOLE

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, StandardCopyOption}
 import scala.jdk.CollectionConverters._
 
 /** Shared on-disk GENERATION STORE for the streaming twins' durable
@@ -141,6 +141,4 @@ object GenStore {
                             name: String): Option[Seq[(String, Long)]] =
     committedGens.reverse.iterator.map(_.resolve(name))
       .find(Files.exists(_)).map(readTokenCounts)
-
-  private[streaming] def asPath(s: String): Path = Paths.get(s)
 }

@@ -103,6 +103,27 @@ class ContractSpec extends AnyFunSuite {
       s"inventory rows naming nonexistent queries after expansion: $ghosts")
   }
 
+  test("src/main's entry points are exactly the four CLIs, the data " +
+       "generator and the profiler (no one-off probe mains)") {
+    import scala.jdk.CollectionConverters._
+    val files = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main"))
+    val sources = try files.iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toList finally files.close()
+    val objectDecl = """(?m)^\s*object\s+(\w+)""".r
+    val mains = sources.flatMap { path =>
+      val text = new String(java.nio.file.Files.readAllBytes(path), "UTF-8")
+      val pkg = """(?m)^package\s+([\w.]+)""".r
+        .findFirstMatchIn(text).map(_.group(1) + ".").getOrElse("")
+      val objects = objectDecl.findAllMatchIn(text).toList
+      // each `def main(` belongs to the nearest object declared above it
+      """\bdef\s+main\s*\(""".r.findAllMatchIn(text).map { m =>
+        pkg + objects.filter(_.start < m.start).last.group(1)
+      }
+    }
+    assert(mains.sorted == Seq("graft.Bench", "graft.Explain", "graft.Run",
+      "graft.Verify", "graft.tools.GenData", "graft.tools.Profile"), mains)
+  }
+
   test("rows-only allowlist stays minimal (everything in it exists)") {
     val stale = rowsOnly -- SparkEntry.queries.keySet
     assert(stale.isEmpty, s"allowlisted names no longer exist: $stale")

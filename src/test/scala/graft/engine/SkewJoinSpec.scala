@@ -33,12 +33,14 @@ class SkewJoinSpec extends SparkSpec {
   test("AQE skew-split fires on the LSH band self-join's hot bucket") {
     // the cluster-scale LSH candidate join (corpus too big to
     // broadcast) is a shuffled self-join on (band, bk); an adversarial
-    // corpus concentrates one bucket (Stress.lshSkewStress builds the
-    // full version). This pins Spark's OptimizeSkewedJoin as the
-    // backstop for that exact join shape: a hot (band, bk) partition
-    // gets split (the SMJ is marked skew=true) and results are
-    // unchanged. Thresholds are lowered so the split triggers at test
-    // scale; broadcast is disabled to force the shuffle-join arm.
+    // corpus concentrates one bucket (PLANS.md "LSH banding under
+    // adversarial skew" measured the full version with a probe tool
+    // last present at commit 6989ace). This pins Spark's
+    // OptimizeSkewedJoin as the backstop for that exact join shape: a
+    // hot (band, bk) partition gets split (the SMJ is marked
+    // skew=true) and results are unchanged. Thresholds are lowered so
+    // the split triggers at test scale; broadcast is disabled to force
+    // the shuffle-join arm.
     val confs = Seq(
       "spark.sql.autoBroadcastJoinThreshold" -> "-1",
       "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1",

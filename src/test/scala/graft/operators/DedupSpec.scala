@@ -698,6 +698,9 @@ class DedupSpec extends SparkSpec {
       (i.toLong * 7 % 401, words.mkString(" "))
     }.toDF("doc_id", "text")
     assertDedupLaw(mutated, Seq(0.2, 0.3, 0.5, 0.8))
+    // an id that is not the first column: every path keeps the
+    // corpus's column order
+    assertDedupLaw(mutated.select("text", "doc_id"), Seq(0.3))
   }
 
   test("keepCanonicalJaccard: driver tier == distributed path on NULL " +
