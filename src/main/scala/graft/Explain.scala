@@ -5,7 +5,12 @@ import org.apache.spark.sql.SparkSession
 /** Plan-inspection CLI — the ONE entry point for plan-shape iteration
   * (the former `graft.tools.Explain` extended-mode twin is folded in
   * here behind a flag). Prints the physical plan for the given queries
-  * without executing them. Usage:
+  * without running the plan itself. Building a query's frame still
+  * runs the jobs of its eager operators (the similarity top-k sites,
+  * index builds, checkpoints and driver-side collects), so the plan
+  * printed for those is the plan over their results. Expression, plan
+  * and RDD ids differ between runs; mask them before diffing plans.
+  * Usage:
   *   graft.Explain [-extended] [sfDir] [query ...]
   * Default mode is `formatted` (the PLANS.md captures); `-extended`
   * prints the parsed/analyzed/optimized/physical chain.

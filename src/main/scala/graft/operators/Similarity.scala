@@ -13,8 +13,9 @@ import graft.plans.{LongArrayDot, TopKPairsBuffer}
 /** Approximate-nearest-neighbor search over embedding columns.
   *
   * Scale design: the brute-force path broadcasts the (small) query set and
-  * streams the corpus — one pass, no corpus shuffle, per-partition top-k
-  * folded by a single window over query keys. The IVF path adds a coarse
+  * streams the corpus — one pass, no corpus shuffle, a bounded top-k per
+  * query inside each task and one merge on the driver ([[mergedTopK]],
+  * the kernel every ranked path shares). The IVF path adds a coarse
   * quantizer: vectors are assigned to their nearest centroid once
   * (clustered write at 100 TB), and a query probes only `nprobe` cells —
   * corpus scan cost drops by ~nlist/nprobe.
@@ -36,21 +37,16 @@ object Similarity {
       quantize(col("embedding")).as("cv"))
 
   /** Brute-force top-k by quantized dot product. `queries` is expected to
-    * be small (broadcast); ranking ties break by corpus vec_id.
+    * be small (broadcast); ranking ties break by corpus vec_id. Eager:
+    * see [[mergedTopK]].
     */
-  def bruteForceTopK(queries: DataFrame, corpus: DataFrame, k: Int): DataFrame = {
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("score").desc, col("cid"))
-    prepC(corpus).crossJoin(broadcast(prepQ(queries)))
-      .filter(col("qid") =!= col("cid"))
-      .withColumn("score", LongArrayDot(col("qv"), col("cv")))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select(col("qid"), col("rnk"), col("cid"), col("score"))
-  }
+  def bruteForceTopK(queries: DataFrame, corpus: DataFrame, k: Int): DataFrame =
+    dotTopK(prepQ(queries), prepC(corpus), k)
 
   /** Brute-force top-k by double cosine (production metric, not
     * oracle-checked: float summation order varies across engines).
+    * Stays on its window: the shared heap ([[TopKHeaps]]) ranks long
+    * scores, and these are doubles.
     */
   def bruteForceTopKCosine(queries: DataFrame, corpus: DataFrame,
                            k: Int): DataFrame = {
@@ -172,16 +168,21 @@ object Similarity {
   private val TopKSchema = StructType(Seq(StructField("qid", LongType),
     StructField("rnk", IntegerType, nullable = false),
     StructField("cid", LongType), StructField("score", LongType)))
+  private val CodebookSchema =
+    StructType.fromDDL("s int, code_id long, cent array<long>")
+  private val PqCodesSchema = StructType.fromDDL("cid long, s int, code_id long")
+  private val SqStatsSchema = StructType.fromDDL("d int, lo long, hi long")
+  private val SqCodesSchema = StructType.fromDDL("cid long, codes array<long>")
 
-  /** The stored coarse quantizer, read with its declared schema (no
-    * schema-inference job).
+  /** An index artifact (`centroids`, `codebook`, `stats`, `codes`),
+    * read with its declared schema: no schema-inference job.
     */
-  private def readCentroids(spark: SparkSession, indexPath: String): DataFrame =
-    spark.read.schema(CentroidSchema).parquet(s"$indexPath/centroids")
+  private def readIndex(spark: SparkSession, indexPath: String, name: String,
+                        schema: StructType): DataFrame =
+    spark.read.schema(schema).parquet(s"$indexPath/$name")
 
   /** The IVF search kernel shared by [[ivfTopK]] and
-    * [[ivfTopKIndexed]] — top-k inside each partition, one global merge
-    * (REPOSE, ICDE 2021):
+    * [[ivfTopKIndexed]]:
     *
     *  1. probe, on the driver: each collected query (qid, qv) scores the
     *     `cents` rows (cent_id, cent_v) with LongArrayDot's arithmetic;
@@ -189,9 +190,8 @@ object Similarity {
     *     desc (NULL last), then cent_id;
     *  2. scan: `cells(probed)` is the (cid, cv, cent_id) cell map cut to
     *     the probed cells (None when none of them holds a vector); ONE
-    *     job over it keeps a bounded top-k per qid in every task;
-    *  3. merge the task heaps on the driver and rank by score desc
-    *     (NULL last), then cid, skipping qid == cid.
+    *     [[mergedTopK]] job over it scores each cell's vectors against
+    *     the query rows probing that cell.
     *
     * Queries are broadcast-sized (they are collected; a local frame
     * collects without a job). Eager: the scan runs on call and the
@@ -200,20 +200,16 @@ object Similarity {
   private def ivfSearch(queries: DataFrame, cents: Array[InternalRow],
                         k: Int, nprobe: Int)
                        (cells: Seq[Long] => Option[DataFrame]): DataFrame = {
-    val spark = queries.sparkSession
     val qs = RelationBridge.collectInternal(prepQ(queries))
       .filterNot(_.isNullAt(0))
-    val qids = qs.map(_.getLong(0)).distinct
-    val heapOf = qids.zipWithIndex.toMap
-    // one heap per qid: query rows sharing a qid feed the same heap
-    val qHeap = qs.map(r => heapOf(r.getLong(0)))
+    val qid = qs.map(_.getLong(0))
     val qv = qs.map(vec)
     val cv = cents.map(vec)
     val centIds = cents.map(r => Option.when(!r.isNullAt(0))(r.getLong(0)))
     // cell -> the query rows probing it. The rows of one qid share its
     // `nprobe` slots; a NULL cent_id keeps its slot but matches no cell.
     val byCell = scala.collection.mutable.HashMap.empty[Long, Array[Int]]
-    for (rowsOfQid <- qs.indices.groupBy(qHeap).values) {
+    for (rowsOfQid <- qs.indices.groupBy(qid).values) {
       val pairs = for (q <- rowsOfQid; c <- cv.indices)
         yield (dot(qv(q), cv(c)), centIds(c), q)
       pairs.sortBy(p => (p._1, p._2))(ProbeOrder).take(nprobe).foreach {
@@ -221,27 +217,19 @@ object Similarity {
           id.foreach(c => byCell(c) = byCell.getOrElse(c, Array.empty[Int]) :+ q)
       }
     }
-    val heaps = new IvfHeaps(qids.length, k)
-    if (k >= 1 && byCell.nonEmpty) cells(byCell.keys.toSeq.sorted).foreach { df =>
-      val cellQs = byCell.toMap
-      df.select(col("cid"), col("cv"), col("cent_id"))
-        .queryExecution.toRdd.mapPartitions { rows =>
-          val local = new IvfHeaps(qids.length, k)
-          rows.foreach { r =>
-            if (!r.isNullAt(0) && !r.isNullAt(2))
-              cellQs.get(r.getLong(2)).foreach { probing =>
-                val cid = r.getLong(0)
-                val v = vec(r)
-                probing.foreach { q =>
-                  if (qids(qHeap(q)) != cid)
-                    local.insert(qHeap(q), dot(qv(q), v), cid)
-                }
-              }
-          }
-          Iterator.single(local)
-        }.collect().foreach(heaps.merge)
+    val cellQs = byCell.toMap
+    val scan =
+      if (k >= 1 && byCell.nonEmpty) cells(byCell.keys.toSeq.sorted)
+      else None
+    mergedTopK(queries.sparkSession, k,
+        scan.map(_.select(col("cid"), col("cv"), col("cent_id")))) { (r, heaps) =>
+      if (!r.isNullAt(0) && !r.isNullAt(2))
+        cellQs.get(r.getLong(2)).foreach { probing =>
+          val cid = r.getLong(0)
+          val v = vec(r)
+          probing.foreach(q => heaps.insert(qid(q), cid, dot(qv(q), v)))
+        }
     }
-    RelationBridge.localDf(spark, TopKSchema, heaps.ranked(qids))
   }
 
   /** Probe order: pscore desc with NULL last, then cent_id asc with
@@ -267,34 +255,86 @@ object Similarity {
       s
     }
 
-  /** Bounded top-k per heap: scored candidates by (score desc, cid),
-    * and NULL-scored ones (a NULL vector on either side) by cid alone —
-    * those rank after every scored one, as `score DESC NULLS LAST` does.
+  /** The top-k kernel of the similarity family — top-k inside each
+    * partition, one global merge (REPOSE, ICDE 2021). Every task of
+    * `rows` hands its rows to `feed`, which inserts (qid, cid, score)
+    * candidates into the task's [[TopKHeaps]]; the driver merges the
+    * task heaps. Returns (qid, rnk, cid, score), rnk 1..k per qid, in
+    * the order of `row_number() over (partition by qid order by score
+    * desc, cid)` with `qid == cid` skipped.
+    *
+    * Eager: one job on call, none when `k < 1` or `rows` is None, and
+    * the result is a local frame. A task holds k entries per qid it
+    * sees, so the query side must stay driver-sized.
     */
-  private final class IvfHeaps(n: Int, k: Int) extends Serializable {
-    private val scored = Array.fill(n)(new TopKPairsBuffer(k))
-    private val unscored = Array.fill(n)(new TopKPairsBuffer(k))
+  private def mergedTopK(spark: SparkSession, k: Int, rows: Option[DataFrame],
+                         distinctIds: Boolean = false)
+                        (feed: (InternalRow, TopKHeaps) => Unit): DataFrame = {
+    val heaps = new TopKHeaps(k, distinctIds)
+    if (k >= 1) rows.foreach(_.queryExecution.toRdd.mapPartitions { it =>
+      val local = new TopKHeaps(k, distinctIds)
+      it.foreach(feed(_, local))
+      Iterator.single(local)
+    }.collect().foreach(heaps.merge))
+    RelationBridge.localDf(spark, TopKSchema, heaps.ranked)
+  }
 
-    def insert(h: Int, score: Option[Long], cid: Long): Unit = score match {
-      case Some(sc) => scored(h).insert(sc, cid, distinctIds = false)
-      case None => unscored(h).insert(0L, cid, distinctIds = false)
+  /** [[mergedTopK]] over (qid, cid, score) candidate rows; rows with a
+    * NULL qid or cid drop, as a `qid =!= cid` filter drops them.
+    */
+  private def topK(candidates: DataFrame, k: Int,
+                   distinctIds: Boolean = false): DataFrame =
+    mergedTopK(candidates.sparkSession, k,
+        Some(candidates.select(col("qid"), col("cid"), col("score"))),
+        distinctIds) { (r, heaps) =>
+      if (!r.isNullAt(0) && !r.isNullAt(1))
+        heaps.insert(r.getLong(0), r.getLong(1),
+          Option.unless(r.isNullAt(2))(r.getLong(2)))
     }
 
-    def merge(o: IvfHeaps): Unit =
-      for (h <- 0 until n;
-           (from, to) <- Seq(o.scored(h) -> scored(h), o.unscored(h) -> unscored(h));
-           i <- 0 until from.n)
-        to.insert(from.scores(i), from.ids(i), distinctIds = false)
+  /** [[topK]] by LongArrayDot(qv, cv) over every pair of a (qid, qv)
+    * query and a (cid, cv) corpus row: the corpus streams once past
+    * the broadcast queries.
+    */
+  private def dotTopK(q: DataFrame, c: DataFrame, k: Int): DataFrame =
+    topK(c.crossJoin(broadcast(q)).select(col("qid"), col("cid"),
+      LongArrayDot(col("qv"), col("cv")).as("score")), k)
 
-    /** (qid, rnk, cid, score) rows, rnk 1..k per heap. */
-    def ranked(qids: Array[Long]): Seq[InternalRow] =
-      qids.indices.flatMap { h =>
-        val s = scored(h)
-        val all = (0 until s.n).map(i => (s.ids(i), s.scores(i): Any)) ++
-          (0 until unscored(h).n).map(i => (unscored(h).ids(i), null))
-        all.take(k).zipWithIndex.map { case ((cid, score), i) =>
-          InternalRow(qids(h), i + 1, cid, score)
-        }
+  /** Bounded top-k per qid, skipping qid == cid: scored candidates by
+    * (score desc, cid), and NULL-scored ones (a NULL vector on either
+    * side) by cid alone — those rank after every scored one, as
+    * `score DESC NULLS LAST` does. Rows that repeat a qid share its
+    * heaps; with `distinctIds` a (qid, cid) keeps only its better copy.
+    * A qid's buffers are built on its first candidate.
+    */
+  private final class TopKHeaps(k: Int, distinctIds: Boolean)
+      extends Serializable {
+    private type Heaps = scala.collection.mutable.HashMap[Long, TopKPairsBuffer]
+    private val scored, unscored: Heaps = new Heaps
+
+    private def heap(m: Heaps, qid: Long): TopKPairsBuffer =
+      m.getOrElseUpdate(qid, new TopKPairsBuffer(k))
+
+    def insert(qid: Long, cid: Long, score: Option[Long]): Unit =
+      if (qid != cid) score match {
+        case Some(s) => heap(scored, qid).insert(s, cid, distinctIds)
+        case None => heap(unscored, qid).insert(0L, cid, distinctIds)
+      }
+
+    def merge(o: TopKHeaps): Unit =
+      for ((from, to) <- Seq(o.scored -> scored, o.unscored -> unscored);
+           (qid, b) <- from; i <- 0 until b.n)
+        heap(to, qid).insert(b.scores(i), b.ids(i), distinctIds)
+
+    /** (qid, rnk, cid, score) rows by qid, then rnk 1..k. */
+    def ranked: Seq[InternalRow] =
+      (scored.keySet ++ unscored.keySet).toSeq.sorted.flatMap { qid =>
+        def entries(m: Heaps, score: Long => Any) = m.get(qid).toSeq
+          .flatMap(b => (0 until b.n).map(i => (b.ids(i), score(b.scores(i)))))
+        (entries(scored, s => s) ++ entries(unscored, _ => null)).take(k)
+          .zipWithIndex.map { case ((cid, score), i) =>
+            InternalRow(qid, i + 1, cid, score)
+          }
       }
   }
 
@@ -326,7 +366,7 @@ object Similarity {
     // nlist rows: one file is the right layout for a driver-side load
     cents.coalesce(1).write.mode("overwrite")
       .parquet(s"$indexPath/centroids")
-    assignToCells(corpus, readCentroids(spark, indexPath))
+    assignToCells(corpus, readIndex(spark, indexPath, "centroids", CentroidSchema))
       .transform(graft.engine.Spread.byKey(_, col("cent_id")))
       .write.mode("overwrite").partitionBy("cent_id")
       .parquet(s"$indexPath/assigned")
@@ -348,7 +388,8 @@ object Similarity {
     * given frozen centroids.
     */
   def appendToIvfIndex(newVectors: DataFrame, indexPath: String): Unit =
-    assignToCells(newVectors, readCentroids(newVectors.sparkSession, indexPath))
+    assignToCells(newVectors, readIndex(newVectors.sparkSession, indexPath,
+        "centroids", CentroidSchema))
       .transform(graft.engine.Spread.byKey(_, col("cent_id")))
       .write.mode("append").partitionBy("cent_id")
       .parquet(s"$indexPath/assigned")
@@ -368,7 +409,8 @@ object Similarity {
   def ivfTopKIndexed(queries: DataFrame, indexPath: String, k: Int,
                      nprobe: Int = 4): DataFrame = {
     val spark = queries.sparkSession
-    val cents = RelationBridge.collectInternal(readCentroids(spark, indexPath))
+    val cents = RelationBridge.collectInternal(
+      readIndex(spark, indexPath, "centroids", CentroidSchema))
     ivfSearch(queries, cents, k, nprobe) { probed =>
       val root = new Path(s"$indexPath/assigned")
       val present = root.getFileSystem(spark.sessionState.newHadoopConf())
@@ -407,6 +449,9 @@ object Similarity {
     *   - score: ADC = sum_s <q_s, cent[code_s]> — the PQ approximation of
     *     <q, v> — summed as exact longs, ranked desc with ties to the
     *     lower corpus id.
+    *
+    * Eager: the codebook, encode and ADC jobs run on call (see
+    * [[mergedTopK]]).
     */
   def pqTopK(queries: DataFrame, corpus: DataFrame, k: Int,
              subspaces: Int = 8, dim: Int = 64,
@@ -456,7 +501,8 @@ object Similarity {
 
   /** The ADC search kernel shared by [[pqTopK]] and [[pqTopKIndexed]]:
     * per-query lookup table against the codebook (broadcast), one scan
-    * of the code table — the corpus floats are never touched.
+    * of the code table — the corpus floats are never touched. The
+    * per-(qid, cid) ADC sums feed [[topK]]; eager.
     */
   private def pqSearch(queries: DataFrame, codebook: DataFrame,
                        codes: DataFrame, k: Int, subspaces: Int,
@@ -468,15 +514,9 @@ object Similarity {
       .join(broadcast(codebook), Seq("s"))
       .select(col("qid"), col("s"), col("code_id"),
         LongArrayDot(col("qsub"), col("cent")).as("p"))
-    val wRank = Window.partitionBy(col("qid"))
-      .orderBy(col("score").desc, col("cid"))
-    codes.join(broadcast(lut), Seq("s", "code_id"))
-      .filter(col("qid") =!= col("cid"))
+    topK(codes.join(broadcast(lut), Seq("s", "code_id"))
       .groupBy(col("qid"), col("cid"))
-      .agg(sum(col("p")).as("score"))
-      .withColumn("rnk", row_number().over(wRank))
-      .filter(col("rnk") <= k)
-      .select(col("qid"), col("rnk"), col("cid"), col("score"))
+      .agg(sum(col("p")).as("score")), k)
   }
 
   /** Build a PERSISTED PQ index — codebook + corpus codes written once
@@ -493,14 +533,18 @@ object Similarity {
   def buildPqIndex(corpus: DataFrame, indexPath: String,
                    subspaces: Int = 8, dim: Int = 64,
                    nCodes: Int = 16): Unit = {
-    val spark = corpus.sparkSession
     pqCodebook(corpus, subspaces, dim, nCodes)
       .coalesce(1).write.mode("overwrite")
       .parquet(s"$indexPath/codebook")
-    val stored = spark.read.parquet(s"$indexPath/codebook")
-    pqEncode(corpus, stored, subspaces, dim)
-      .write.mode("overwrite").parquet(s"$indexPath/codes")
+    writePqCodes(corpus, indexPath, subspaces, dim, "overwrite")
   }
+
+  /** Encode `vectors` against the stored codebook into `codes/`. */
+  private def writePqCodes(vectors: DataFrame, indexPath: String,
+                           subspaces: Int, dim: Int, mode: String): Unit =
+    pqEncode(vectors, readIndex(vectors.sparkSession, indexPath, "codebook",
+        CodebookSchema), subspaces, dim)
+      .write.mode(mode).parquet(s"$indexPath/codes")
 
   /** Incremental maintenance for a persisted PQ index
     * ([[appendToIvfIndex]]'s sibling): new vectors are encoded against
@@ -513,24 +557,20 @@ object Similarity {
     * build shard) — SimilaritySpec law.
     */
   def appendToPqIndex(newVectors: DataFrame, indexPath: String,
-                      subspaces: Int = 8, dim: Int = 64): Unit = {
-    val spark = newVectors.sparkSession
-    val stored = spark.read.parquet(s"$indexPath/codebook")
-    pqEncode(newVectors, stored, subspaces, dim)
-      .write.mode("append").parquet(s"$indexPath/codes")
-  }
+                      subspaces: Int = 8, dim: Int = 64): Unit =
+    writePqCodes(newVectors, indexPath, subspaces, dim, "append")
 
   /** PQ top-k against a persisted index ([[buildPqIndex]]): loads the
     * codebook (broadcast) and code table, runs the SAME ADC kernel as
     * the inline path — no encoding, no corpus floats at query time;
-    * shares q_simsearch_pq's oracle.
+    * shares q_simsearch_pq's oracle. Both artifacts are read with
+    * their declared schemas. Eager, like [[pqTopK]].
     */
   def pqTopKIndexed(queries: DataFrame, indexPath: String, k: Int,
                     subspaces: Int = 8, dim: Int = 64): DataFrame = {
     val spark = queries.sparkSession
-    val codebook = spark.read.parquet(s"$indexPath/codebook")
-    val codes = spark.read.parquet(s"$indexPath/codes")
-    pqSearch(queries, codebook, codes, k, subspaces, dim)
+    pqSearch(queries, readIndex(spark, indexPath, "codebook", CodebookSchema),
+      readIndex(spark, indexPath, "codes", PqCodesSchema), k, subspaces, dim)
   }
 
   /** Scalar-quantization (SQ8) top-k — the OTHER classic compressed-
@@ -548,38 +588,49 @@ object Similarity {
     * precedent); encode + dequantize is a narrow codegen'd map with
     * the stats as array literals; scoring broadcasts the (small) query
     * set and streams the corpus once — no corpus shuffle anywhere.
+    * Eager: the stats collect and the scoring job run on call.
     */
   def sqTopK(queries: DataFrame, corpus: DataFrame, k: Int,
              dim: Int = 64): DataFrame = {
-    val stats = prepC(corpus)
+    val stats = sqStatsLiterals(sqStats(corpus), dim)
+    dotTopK(prepQ(queries), prepC(corpus).select(col("cid"),
+      sqDequantized(sqCodes(col("cv"), stats), stats).as("cv")), k)
+  }
+
+  /** Per-dim (d, lo, hi) of the quantized corpus: one explode and a
+    * dim-row (min, max) aggregation.
+    */
+  private def sqStats(corpus: DataFrame): DataFrame =
+    prepC(corpus)
       .select(posexplode(col("cv")).as(Seq("d", "v")))
       .groupBy(col("d"))
       .agg(min(col("v")).as("lo"), max(col("v")).as("hi"))
-      .orderBy(col("d")).collect()
-    require(stats.length == dim, s"expected $dim dims, got ${stats.length}")
-    val los = stats.map(_.getLong(1)).toSeq
-    val rans = stats.map(r => r.getLong(2) - r.getLong(1)).toSeq
-    val loLit = typedlit(los)
-    val ranLit = typedlit(rans)
-    // code_d = (v_d - lo_d) * 255 div max(range_d, 1)  (8-bit, exact);
-    // dequantized-scaled value dv_d = 255*lo_d + code_d * range_d
-    val dq = transform(col("cv"), (v, i) => {
-      val lo = element_at(loLit, i + 1)
-      val ran = element_at(ranLit, i + 1)
-      val code = call_function("div",
-        (v - lo) * lit(255L), greatest(ran, lit(1L)))
-      lit(255L) * lo + code * ran
-    })
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("score").desc, col("cid"))
-    prepC(corpus).withColumn("dq", dq)
-      .crossJoin(broadcast(prepQ(queries)))
-      .filter(col("qid") =!= col("cid"))
-      .withColumn("score", LongArrayDot(col("qv"), col("dq")))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select(col("qid"), col("rnk"), col("cid"), col("score"))
+
+  /** The collected stats as (lo, range) array literals, in `d` order
+    * (dim rows, sorted on the driver).
+    */
+  private def sqStatsLiterals(stats: DataFrame,
+                              dim: Int): (Column, Column) = {
+    val st = stats.collect().sortBy(_.getInt(0))
+    require(st.length == dim, s"expected $dim dims, got ${st.length}")
+    val los = st.map(_.getLong(1)).toSeq
+    val rans = st.map(r => r.getLong(2) - r.getLong(1)).toSeq
+    (typedlit(los), typedlit(rans))
   }
+
+  /** code_d = (v_d - lo_d) * 255 div max(range_d, 1): 8-bit, exact. */
+  private def sqCodes(v: Column, stats: (Column, Column)): Column =
+    transform(v, (x, i) => {
+      val lo = element_at(stats._1, i + 1)
+      val ran = element_at(stats._2, i + 1)
+      call_function("div", (x - lo) * lit(255L), greatest(ran, lit(1L)))
+    })
+
+  /** The dequantized-scaled vector: dv_d = 255·lo_d + code_d·range_d. */
+  private def sqDequantized(codes: Column, stats: (Column, Column)): Column =
+    transform(codes, (code, i) =>
+      lit(255L) * element_at(stats._1, i + 1) +
+        code * element_at(stats._2, i + 1))
 
   /** Build a persisted SQ8 index — per-dim (lo, hi) stats plus the
     * 8-bit code table written once ([[buildIvfIndex]]'s sibling for
@@ -594,30 +645,22 @@ object Similarity {
     */
   def buildSqIndex(corpus: DataFrame, indexPath: String,
                    dim: Int = 64): Unit = {
-    val spark = corpus.sparkSession
-    prepC(corpus)
-      .select(posexplode(col("cv")).as(Seq("d", "v")))
-      .groupBy(col("d"))
-      .agg(min(col("v")).as("lo"), max(col("v")).as("hi"))
+    sqStats(corpus)
       .coalesce(1).write.mode("overwrite").parquet(s"$indexPath/stats")
-    val (loLit, ranLit) = sqStatsLiterals(spark.read
-      .parquet(s"$indexPath/stats"), dim)
-    val codes = transform(col("cv"), (v, i) => {
-      val lo = element_at(loLit, i + 1)
-      val ran = element_at(ranLit, i + 1)
-      call_function("div", (v - lo) * lit(255L), greatest(ran, lit(1L)))
-    })
-    prepC(corpus).select(col("cid"), codes.as("codes"))
-      .write.mode("overwrite").parquet(s"$indexPath/codes")
+    writeSqCodes(corpus, indexPath, dim, "overwrite")
   }
 
-  private def sqStatsLiterals(stats: DataFrame,
-                              dim: Int): (Column, Column) = {
-    val st = stats.orderBy(col("d")).collect()
-    require(st.length == dim, s"expected $dim dims, got ${st.length}")
-    val los = st.map(_.getLong(1)).toSeq
-    val rans = st.map(r => r.getLong(2) - r.getLong(1)).toSeq
-    (typedlit(los), typedlit(rans))
+  /** The stored stats as literals: [[sqStatsLiterals]] of `stats/`. */
+  private def readSqStats(spark: SparkSession, indexPath: String,
+                          dim: Int): (Column, Column) =
+    sqStatsLiterals(readIndex(spark, indexPath, "stats", SqStatsSchema), dim)
+
+  /** Code `vectors` against the stored stats into `codes/`. */
+  private def writeSqCodes(vectors: DataFrame, indexPath: String, dim: Int,
+                           mode: String): Unit = {
+    val stats = readSqStats(vectors.sparkSession, indexPath, dim)
+    prepC(vectors).select(col("cid"), sqCodes(col("cv"), stats).as("codes"))
+      .write.mode(mode).parquet(s"$indexPath/codes")
   }
 
   /** Incremental maintenance for a persisted SQ8 index: new vectors
@@ -632,18 +675,8 @@ object Similarity {
     * correctness of the dequantize identity).
     */
   def appendToSqIndex(newVectors: DataFrame, indexPath: String,
-                      dim: Int = 64): Unit = {
-    val spark = newVectors.sparkSession
-    val (loLit, ranLit) = sqStatsLiterals(spark.read
-      .parquet(s"$indexPath/stats"), dim)
-    val codes = transform(col("cv"), (v, i) => {
-      val lo = element_at(loLit, i + 1)
-      val ran = element_at(ranLit, i + 1)
-      call_function("div", (v - lo) * lit(255L), greatest(ran, lit(1L)))
-    })
-    prepC(newVectors).select(col("cid"), codes.as("codes"))
-      .write.mode("append").parquet(s"$indexPath/codes")
-  }
+                      dim: Int = 64): Unit =
+    writeSqCodes(newVectors, indexPath, dim, "append")
 
   /** vec_ids attaining each dimension's min/max quantized value — the
     * (≤ 2·dim)-row shard that must stay in the BUILD half for a later
@@ -662,30 +695,19 @@ object Similarity {
       .distinct.sorted.toSeq
 
   /** SQ8 top-k against a persisted index ([[buildSqIndex]]): loads the
-    * dim-row stats (plan literals) and the code table, dequantizes
-    * dv_d = 255·lo_d + code_d·range_d — the identical arithmetic the
-    * inline [[sqTopK]] folds into one expression — and ADC-scores a
-    * broadcast query set in one pass over the codes. Corpus floats are
-    * never read at query time; shares q_simsearch_sq's oracle.
+    * dim-row stats (plan literals) and the code table, both with their
+    * declared schemas, dequantizes dv_d = 255·lo_d + code_d·range_d —
+    * the identical arithmetic the inline [[sqTopK]] applies — and
+    * ADC-scores a broadcast query set in one pass over the codes.
+    * Corpus floats are never read at query time; shares
+    * q_simsearch_sq's oracle. Eager: see [[mergedTopK]].
     */
   def sqTopKIndexed(queries: DataFrame, indexPath: String, k: Int,
                     dim: Int = 64): DataFrame = {
     val spark = queries.sparkSession
-    val (loLit, ranLit) = sqStatsLiterals(spark.read
-      .parquet(s"$indexPath/stats"), dim)
-    val dq = transform(col("codes"), (code, i) =>
-      lit(255L) * element_at(loLit, i + 1) +
-        code * element_at(ranLit, i + 1))
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("score").desc, col("cid"))
-    spark.read.parquet(s"$indexPath/codes")
-      .withColumn("dq", dq)
-      .crossJoin(broadcast(prepQ(queries)))
-      .filter(col("qid") =!= col("cid"))
-      .withColumn("score", LongArrayDot(col("qv"), col("dq")))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select(col("qid"), col("rnk"), col("cid"), col("score"))
+    val stats = readSqStats(spark, indexPath, dim)
+    dotTopK(prepQ(queries), readIndex(spark, indexPath, "codes", SqCodesSchema)
+      .select(col("cid"), sqDequantized(col("codes"), stats).as("cv")), k)
   }
 
   /** k-NN graph construction: every corpus vector's top-k neighbors —
@@ -752,10 +774,12 @@ object Similarity {
     // 128-group sort-based fallback re-sorts the input; raising the
     // threshold instead regresses every high-cardinality collect_list
     // agg in the engine).
-    //   Phase A: per-PARTITION local top-k in a bounded hashmap
+    //   Phase A: per-PARTITION local top-k in the kernel's TopKHeaps
     //   (mapPartitions; n_vectors × (k+1) longs of state), emitting
     //   ≤ k rows per query per partition — the map-side combine,
-    //   hand-rolled to stay off the object-agg fallback path.
+    //   hand-rolled to stay off the object-agg fallback path. Phase A
+    //   is not mergedTopK: the queries are the whole corpus, so the
+    //   merge must stay distributed.
     //   Phase B: the native TopKPairsAgg merges the ≤ k·partitions
     //   rows per query; distinctIds absorbs duplicate candidate edges
     //   in both phases in place of a corpus-wide dropDuplicates.
@@ -763,20 +787,9 @@ object Similarity {
     val spark2 = corpus.sparkSession
     import spark2.implicits._
     val reduced = scored.as[(Long, Long, Long)].mapPartitions { it =>
-      val m = new java.util.HashMap[Long, graft.plans.TopKPairsBuffer]()
-      it.foreach { case (qid, cid, score) =>
-        var b = m.get(qid)
-        if (b == null) {
-          b = new graft.plans.TopKPairsBuffer(k); m.put(qid, b)
-        }
-        b.insert(score, cid, distinctIds = true)
-      }
-      import scala.jdk.CollectionConverters._
-      m.entrySet().iterator().asScala.flatMap { e =>
-        val b = e.getValue
-        (0 until b.n).iterator.map(i => (e.getKey.longValue, b.ids(i),
-          b.scores(i)))
-      }
+      val heaps = new TopKHeaps(k, distinctIds = true)
+      it.foreach { case (qid, cid, score) => heaps.insert(qid, cid, Some(score)) }
+      heaps.ranked.iterator.map(r => (r.getLong(0), r.getLong(2), r.getLong(3)))
     }.toDF("qid", "cid", "score")
     reduced.groupBy(col("qid"))
       .agg(graft.plans.TopKPairsAgg(col("score"), col("cid"), k,
@@ -796,7 +809,10 @@ object Similarity {
     * bands × (bits/band); ranking of survivors is exact quantized dot,
     * so precision within the candidate set is exact. Queries that share
     * no bucket with k others return fewer than k rows (standard ANN
-    * recall trade-off, documented at the call site).
+    * recall trade-off, documented at the call site). A pair sharing
+    * several bands is one candidate: the heap keeps one copy per
+    * (qid, cid), the better one, in place of a dedup shuffle. Eager:
+    * see [[mergedTopK]].
     */
   def lshTopK(queries: DataFrame, corpus: DataFrame, k: Int,
               bits: Int = 12, bands: Int = 4, dim: Int = 64): DataFrame = {
@@ -809,16 +825,9 @@ object Similarity {
     // streams — the join shuffles nothing corpus-sized
     val qb = banded(prepQ(queries), "qid", "qv")
     val cb = banded(prepC(corpus), "cid", "cv")
-    val wRank = Window.partitionBy(col("qid"))
-      .orderBy(col("score").desc, col("cid"))
-    cb.join(broadcast(qb), Seq("band", "bk"))
-      .filter(col("qid") =!= col("cid"))
-      .select(col("qid"), col("cid"), col("qv"), col("cv"))
-      .dropDuplicates("qid", "cid")
-      .withColumn("score", LongArrayDot(col("qv"), col("cv")))
-      .withColumn("rnk", row_number().over(wRank))
-      .filter(col("rnk") <= k)
-      .select(col("qid"), col("rnk"), col("cid"), col("score"))
+    topK(cb.join(broadcast(qb), Seq("band", "bk")).select(col("qid"),
+      col("cid"), LongArrayDot(col("qv"), col("cv")).as("score")),
+      k, distinctIds = true)
   }
 
   /** k-Center greedy (farthest-point) selection — the classic 2-approx
@@ -856,6 +865,10 @@ object Similarity {
     * [[bruteForceTopK]] with the label disagreement folded into the
     * pre-ranking filter, so rejected candidates never enter the top-k
     * heap. Returns (qid, rnk, cid, score, neg_label).
+    *
+    * Eager top-k (see [[mergedTopK]]); `neg_label` joins back from the
+    * corpus against a broadcast of the ≤ nq·k kept rows when the
+    * result is read, so corpus vec_ids must be unique.
     */
   def hardNegatives(queries: DataFrame, corpus: DataFrame,
                     k: Int): DataFrame = {
@@ -863,15 +876,14 @@ object Similarity {
       quantize(col("embedding")).as("qv"), col("label").as("qlab"))
     val c = corpus.select(col("vec_id").as("cid"),
       quantize(col("embedding")).as("cv"), col("label").as("clab"))
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("score").desc, col("cid"))
-    c.crossJoin(broadcast(q))
-      .filter(col("qid") =!= col("cid") && col("clab") =!= col("qlab"))
-      .withColumn("score", LongArrayDot(col("qv"), col("cv")))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
+    val top = topK(c.crossJoin(broadcast(q))
+      .filter(col("clab") =!= col("qlab"))
+      .select(col("qid"), col("cid"),
+        LongArrayDot(col("qv"), col("cv")).as("score")), k)
+    corpus.select(col("vec_id").as("cid"), col("label").as("neg_label"))
+      .join(broadcast(top), Seq("cid"))
       .select(col("qid"), col("rnk"), col("cid"), col("score"),
-        col("clab").as("neg_label"))
+        col("neg_label"))
   }
 
   /** Deterministic ±1 sign matrix for [[randomProject]]: entry (j, d)
@@ -910,23 +922,14 @@ object Similarity {
   /** Brute-force top-k in the PROJECTED space — the cheap first stage
     * of a project-then-rerank pipeline (rerank survivors with full
     * vectors as needed). Same plan shape as [[bruteForceTopK]]; ties
-    * break by corpus vec_id.
+    * break by corpus vec_id. Eager: see [[mergedTopK]].
     */
   def rpTopK(queries: DataFrame, corpus: DataFrame, k: Int,
-             outDim: Int, inDim: Int = 64): DataFrame = {
-    val q = randomProject(queries, outDim, inDim)
-      .select(col("vec_id").as("qid"), col("pv").as("qpv"))
-    val c = randomProject(corpus, outDim, inDim)
-      .select(col("vec_id").as("cid"), col("pv").as("cpv"))
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("score").desc, col("cid"))
-    c.crossJoin(broadcast(q))
-      .filter(col("qid") =!= col("cid"))
-      .withColumn("score", LongArrayDot(col("qpv"), col("cpv")))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select(col("qid"), col("rnk"), col("cid"), col("score"))
-  }
+             outDim: Int, inDim: Int = 64): DataFrame =
+    dotTopK(randomProject(queries, outDim, inDim)
+        .select(col("vec_id").as("qid"), col("pv").as("qv")),
+      randomProject(corpus, outDim, inDim)
+        .select(col("vec_id").as("cid"), col("pv").as("cv")), k)
 
   /** The production two-stage ANN shape composed from
     * [[randomProject]]: rank in the CHEAP projected space (outDim ints
@@ -936,35 +939,23 @@ object Similarity {
     * arithmetic, so the whole cascade — including which candidates the
     * projection admits — is oracle-replayable.
     *
-    * Scale shape: stage 1 streams the corpus once past the broadcast
-    * projected queries; stage 2 streams it once more past the
-    * BROADCAST shortlist (nq·pool ids), so full vectors are only ever
-    * dotted for shortlist members. `pool` = corpus size degenerates to
-    * exact [[bruteForceTopK]] (SimilaritySpec law).
+    * Scale shape: stage 1 ([[rpTopK]] with k = `pool`) streams the
+    * corpus once past the broadcast projected queries; stage 2 streams
+    * it once more past the BROADCAST shortlist (nq·pool ids, a local
+    * frame), so full vectors are only ever dotted for shortlist
+    * members. `pool` = corpus size degenerates to exact
+    * [[bruteForceTopK]] (SimilaritySpec law). Eager: both stages run
+    * on call ([[mergedTopK]]).
     */
   def rpRerankTopK(queries: DataFrame, corpus: DataFrame, k: Int,
                    pool: Int, outDim: Int, inDim: Int = 64): DataFrame = {
     require(pool >= k && k >= 1)
-    val q = randomProject(queries, outDim, inDim)
-      .select(col("vec_id").as("qid"), col("pv").as("qpv"))
-    val c = randomProject(corpus, outDim, inDim)
-      .select(col("vec_id").as("cid"), col("pv").as("cpv"))
-    val wPool = Window.partitionBy(col("qid"))
-      .orderBy(col("pscore").desc, col("cid"))
-    val shortlist = c.crossJoin(broadcast(q))
-      .filter(col("qid") =!= col("cid"))
-      .withColumn("pscore", LongArrayDot(col("qpv"), col("cpv")))
-      .withColumn("prnk", row_number().over(wPool))
-      .filter(col("prnk") <= pool)
+    val shortlist = rpTopK(queries, corpus, pool, outDim, inDim)
       .select(col("qid"), col("cid"))
-    val wK = Window.partitionBy(col("qid"))
-      .orderBy(col("score").desc, col("cid"))
-    prepC(corpus).join(broadcast(shortlist), Seq("cid"))
+    topK(prepC(corpus).join(broadcast(shortlist), Seq("cid"))
       .join(broadcast(prepQ(queries)), Seq("qid"))
-      .withColumn("score", LongArrayDot(col("qv"), col("cv")))
-      .withColumn("rnk", row_number().over(wK))
-      .filter(col("rnk") <= k)
-      .select(col("qid"), col("rnk"), col("cid"), col("score"))
+      .select(col("qid"), col("cid"),
+        LongArrayDot(col("qv"), col("cv")).as("score")), k)
   }
 
   /** Maximal Marginal Relevance diversified top-k — the standard
@@ -974,12 +965,19 @@ object Similarity {
     * corpora return k near-copies under plain top-k).
     *
     * Two-stage shape, which is also the production shape at 100 TB:
-    *  1. candidate pool — distributed top-`pool` by quantized dot
-    *     product (ONE corpus pass past the broadcast queries, same
-    *     plan as [[bruteForceTopK]]);
+    *  1. candidate pool — top-`pool` by quantized dot product, eager
+    *     (ONE corpus pass past the broadcast queries: the
+    *     [[bruteForceTopK]] kernel); the pooled vectors join back from
+    *     the corpus against a broadcast of the ≤ nq·pool kept rows;
     *  2. the greedy rerank runs per query over its ≤ pool candidates
     *     inside `flatMapGroups` (pool²·k integer ops per query;
     *     queries parallelize, the corpus is long gone).
+    *
+    * NULL-scored candidates (a NULL embedding on either side) drop
+    * before the walk: they have no relevance and no similarity. A
+    * query with a NULL embedding therefore returns no rows, and one
+    * whose pool holds fewer than k scored candidates returns fewer
+    * than k.
     *
     * λ is the exact fraction lamNum/lamDen and every score is integer
     * (mmr = lamNum·rel − (lamDen−lamNum)·maxSim; empty-selection
@@ -994,21 +992,13 @@ object Similarity {
       s"lambda $lamNum/$lamDen not in [0,1]")
     val spark = corpus.sparkSession
     import spark.implicits._
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("score").desc, col("cid"))
-    val pooled = prepC(corpus).crossJoin(broadcast(prepQ(queries)))
-      .filter(col("qid") =!= col("cid"))
-      .withColumn("score", LongArrayDot(col("qv"), col("cv")))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= pool)
-      .select(col("qid"), col("cid"), col("score"), col("cv"))
+    val top = dotTopK(prepQ(queries), prepC(corpus), pool)
+      .filter(col("score").isNotNull)
+    val pooled = corpus.select(col("vec_id").as("cid"), col("embedding"))
+      .join(broadcast(top), Seq("cid"))
+      .select(col("qid"), col("cid"), col("score"),
+        quantize(col("embedding")).as("cv"))
       .as[(Long, Long, Long, Array[Long])]
-    def dot(a: Array[Long], b: Array[Long]): Long = {
-      var s = 0L; var i = 0
-      val n = math.min(a.length, b.length)
-      while (i < n) { s += a(i) * b(i); i += 1 }
-      s
-    }
     pooled.groupByKey(_._1)
       .flatMapGroups { (qid, it) =>
         val cands = it.toArray
@@ -1022,10 +1012,9 @@ object Similarity {
               val (_, cid, rel, cv) = cands(i)
               var ms = 0L
               var first = true
-              selected.foreach { sv =>
-                val d = dot(cv, sv)
+              selected.foreach(sv => dot(cv, sv).foreach { d =>
                 if (first || d > ms) { ms = d; first = false }
-              }
+              })
               if (selected.isEmpty) ms = 0L
               val mmr = lamNum * rel - (lamDen - lamNum) * ms
               if (mmr > bestMmr || (mmr == bestMmr && cid < bestCid)) {

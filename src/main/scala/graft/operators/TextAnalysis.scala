@@ -622,18 +622,6 @@ object TextAnalysis {
     */
   private[operators] val BroadcastLmRows = 4000000L
 
-  /** A collected vocab-bounded table as a LocalRelation carrying the
-    * distributed plan's OWN schema — broadcast builds over it run no
-    * job (LocalTableScan.executeCollect is driver-side). InternalRow
-    * end to end: no external-Row boxing on the collect or rebuild.
-    */
-  private def localDf(spark: SparkSession,
-                      rows: Seq[org.apache.spark.sql.catalyst.InternalRow],
-                      schema: org.apache.spark.sql.types.StructType)
-      : DataFrame =
-    org.apache.spark.sql.graftbridge.RelationBridge
-      .localDf(spark, schema, rows)
-
   def bigramCoverage(docs: DataFrame, minCount: Long = 3): DataFrame = {
     // the bigram stream is built NARROW (tokenize off the scan); the LM
     // aggregation's exchange then carries map-side-combined (bigram,
@@ -710,14 +698,14 @@ object TextAnalysis {
         val uniRows = RelationBridge.collectInternal(uniPlan)
         var t = 0L
         uniRows.foreach(r => t += r.getLong(1))
-        val uniL = localDf(spark, uniRows, uniPlan.schema)
-        val totL = localDf(spark,
+        val uniL = RelationBridge.localDf(spark, uniPlan.schema, uniRows)
+        val totL = RelationBridge.localDf(spark,
+          uniPlan.agg(sum(col("cu")).as("t")).schema,
           Seq(new org.apache.spark.sql.catalyst.expressions
             .GenericInternalRow(Array[Any](
-              if (uniRows.isEmpty) null else t))),
-          uniPlan.agg(sum(col("cu")).as("t")).schema)
-        val lmL = localDf(spark, RelationBridge.collectInternal(lm),
-          lm.schema)
+              if (uniRows.isEmpty) null else t))))
+        val lmL = RelationBridge.localDf(spark, lm.schema,
+          RelationBridge.collectInternal(lm))
         (pairs.join(broadcast(lmL), Seq("a", "b")),
           uniL.select(col("tokw").as("a"), col("cu").as("ca")),
           uniL.select(col("tokw").as("b"), col("cu").as("cb")),
@@ -808,20 +796,17 @@ object TextAnalysis {
           contM.merge(r.getUTF8String(1), 1L, (x, y) => x + y)
         }
         import scala.jdk.CollectionConverters._
-        val histL = localDf(spark,
+        val histL = RelationBridge.localDf(spark, histOf(lm).schema,
           histM.entrySet.asScala.toSeq.map(e =>
             new GenericInternalRow(Array[Any](
-              e.getKey, e.getValue()(0), e.getValue()(1)))),
-          histOf(lm).schema)
-        val contL = localDf(spark,
+              e.getKey, e.getValue()(0), e.getValue()(1)))))
+        val contL = RelationBridge.localDf(spark, contOf(lm).schema,
           contM.entrySet.asScala.toSeq.map(e =>
             new GenericInternalRow(Array[Any](
-              e.getKey, e.getValue.longValue))),
-          contOf(lm).schema)
-        val typesL = localDf(spark,
-          Seq(new GenericInternalRow(Array[Any](rows.length.toLong))),
-          typesOf(lm).schema)
-        val lmL = localDf(spark, rows, lm.schema)
+              e.getKey, e.getValue.longValue))))
+        val typesL = RelationBridge.localDf(spark, typesOf(lm).schema,
+          Seq(new GenericInternalRow(Array[Any](rows.length.toLong))))
+        val lmL = RelationBridge.localDf(spark, lm.schema, rows)
         (pairs.join(broadcast(lmL), Seq("a", "b")), histL, contL, typesL)
       } else {
         (graft.engine.Spread.byKey(pairs, col("a"), col("b"))

@@ -14,6 +14,22 @@ class PlanShapeSpec extends SparkSpec {
     SparkEntry.queries(name)(spark, sf())
       .queryExecution.executedPlan.toString
 
+  /** Query `name`'s frame and the operator scopes of each distinct
+    * stage that building it ran — the plan of an eager operator, read
+    * off the jobs it ran, since its frame is a local result.
+    */
+  private def stagesOf(name: String)
+      : (org.apache.spark.sql.DataFrame, Seq[Set[String]]) = {
+    // the session's first read of the table probes its schema in a job
+    graft.engine.Readers.table(spark, sf(), "embeddings")
+    val (df, jobs) = withJobs(SparkEntry.queries(name)(spark, sf()))
+    (df, SparkSpec.stages(jobs))
+  }
+
+  /** How many of `stages` ran an operator whose scope starts with `op`. */
+  private def ran(stages: Seq[Set[String]], op: String): Int =
+    stages.count(_.exists(_.startsWith(op)))
+
   test("q_filter: predicates and column pruning reach the parquet scan") {
     val p = plan("q_filter")
     assert(p.contains("PushedFilters: ["), p)
@@ -58,10 +74,18 @@ class PlanShapeSpec extends SparkSpec {
     assert("Exchange".r.findAllIn(p).size <= 2, p)
   }
 
-  test("q_simsearch: rank<=k filter pushes down as WindowGroupLimit " +
-       "(per-key top-k heap, not a full per-partition sort)") {
-    val p = plan("q_simsearch")
-    assert(p.contains("WindowGroupLimit"), p)
+  test("q_simsearch: no Window — the top-k is one single-stage job that " +
+       "streams the corpus past the broadcast queries, and the query " +
+       "reads its local result") {
+    val (df, stages) = stagesOf("q_simsearch")
+    // the queries' broadcast build, then the scan keeping a bounded
+    // heap per query in each task: no exchange, no window
+    assert(stages.size == 2, stages)
+    assert(ran(stages, "BroadcastExchange") == 1, stages)
+    assert(ran(stages, "Exchange") == 0 && ran(stages, "Window") == 0, stages)
+    val p = df.queryExecution.executedPlan.toString
+    assert(p.contains("LocalTableScan") && !p.contains("Window") &&
+      !p.contains("FileScan"), p)
   }
 
   test("q_event_window: tumbling window aggregates in one shuffle") {
@@ -94,9 +118,14 @@ class PlanShapeSpec extends SparkSpec {
 
   test("q_simsearch_pq: codebook and ADC lookup table both broadcast — " +
        "corpus code assignment and scoring never sort-merge") {
-    val p = plan("q_simsearch_pq")
-    assert("BroadcastHashJoin".r.findAllIn(p).size >= 3, p)
-    assert(!p.contains("SortMergeJoin"), p)
+    val (df, stages) = stagesOf("q_simsearch_pq")
+    // broadcast builds: the codebook (for the encode and for the LUT)
+    // and the LUT itself
+    assert(ran(stages, "BroadcastExchange") >= 3, stages)
+    // the only shuffles are the encode argmin and the ADC sum; a
+    // sort-merge join would add one per side
+    assert(ran(stages, "Exchange") == 2 && ran(stages, "Window") == 0, stages)
+    assert(!df.queryExecution.executedPlan.toString.contains("SortMergeJoin"))
   }
 
   test("q_bloom_join: the bloom literal filters AT the fact scan, " +
@@ -465,17 +494,18 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("q_simsearch_sq: the corpus streams once past a broadcast query " +
-       "side, stats ride as literals (no stats join), and the top-k " +
-       "pre-prunes as WindowGroupLimit") {
-    val p = plan("q_simsearch_sq")
-    assert(p.contains("BroadcastNestedLoopJoin") ||
-      p.contains("BroadcastExchange"), p)
-    assert(p.contains("WindowGroupLimit"), p)
-    // exactly one corpus-side parquet scan of embeddings beyond the
-    // broadcast query scan (the per-dim stats were collected at plan
-    // build and inlined — no third scan, no stats join)
-    assert("Scan parquet".r.findAllIn(p).size <= 2, p)
-    assert(!p.contains("SortMergeJoin"), p)
+       "side in one single-stage job, stats ride as literals (no stats " +
+       "join), and no Window ranks the result") {
+    val (df, stages) = stagesOf("q_simsearch_sq")
+    // the per-dim stats aggregation (its one shuffle), the queries'
+    // broadcast build, and the scoring scan; a stats join would add a
+    // second broadcast, a window a second shuffle
+    assert(stages.size == 4, stages)
+    assert(ran(stages, "Exchange") == 1 && ran(stages, "Window") == 0, stages)
+    assert(ran(stages, "BroadcastExchange") == 1, stages)
+    // the stats scan, the broadcast query scan and the one corpus pass
+    assert(ran(stages, "Scan parquet") == 3, stages)
+    assert(!df.queryExecution.executedPlan.toString.contains("Window"))
   }
 
   test("q_image_neardup: pairs come from ONE band-key hash exchange " +
@@ -560,17 +590,36 @@ class PlanShapeSpec extends SparkSpec {
   test("q_simsearch_pq_idx: the indexed ADC query never touches corpus " +
        "floats — codebook and LUT broadcast, the code table is the " +
        "only corpus-sized scan, and no encode aggregation precedes it") {
-    val df = SparkEntry.queries("q_simsearch_pq_idx")(spark, sf())
-    val p = df.queryExecution.executedPlan.toString
-    // the encode pass is min-of-struct over (cid, s) — its 'best'
-    // buffer appears only in the BUILD job
-    assert(!p.contains("min(struct(d2"), p)
-    val scans = p.linesIterator.filter(_.contains("Location")).toList
-    // query side reads embeddings once (the qid<10 filter); the corpus
-    // side reads ONLY the persisted code table
-    assert(scans.count(_.contains("embeddings.parquet")) == 1, scans)
-    assert(scans.exists(_.contains("codes")), scans)
-    assert(p.contains("BroadcastExchange"), p)
+    import org.apache.spark.sql.functions.col
+    val e = spark.read.parquet(sf() + "/embeddings.parquet")
+      .select("vec_id", "embedding")
+    val queries = spark.createDataFrame(
+      java.util.Arrays.asList(e.filter(col("vec_id") < 10).collect(): _*), e.schema)
+    val root = java.nio.file.Files.createTempDirectory("graft_pq_open").toString
+    spark.conf.set("fs.graftrec.impl", classOf[OpenRecordingFs].getName)
+    spark.conf.set("fs.graftrec.impl.disable.cache", "true")
+    try {
+      graft.operators.Similarity.buildPqIndex(e, s"graftrec://$root")
+      def parquetFiles(dir: String): Set[String] =
+        Option(new java.io.File(root, dir).listFiles()).toSeq.flatten
+          .map(_.getPath).filter(_.endsWith(".parquet")).toSet
+      OpenRecordingFs.opened.clear()
+      val (top, jobs) = withJobs(graft.operators.Similarity.pqTopKIndexed(
+        queries, s"graftrec://$root", k = 5))
+      assert(top.count() == 50)
+      // the codebook and the code table, and nothing else
+      assert(OpenRecordingFs.opened.asScala.toSet ==
+        parquetFiles("codebook") ++ parquetFiles("codes"))
+      val stages = SparkSpec.stages(jobs)
+      // the encode argmin is a SortAggregate: it runs only at build time
+      assert(ran(stages, "SortAggregate") == 0, stages)
+      // codebook and LUT broadcast; the one shuffle is the ADC sum
+      assert(ran(stages, "BroadcastExchange") == 2, stages)
+      assert(ran(stages, "Exchange") == 1 && ran(stages, "Window") == 0, stages)
+    } finally {
+      spark.conf.unset("fs.graftrec.impl")
+      spark.conf.unset("fs.graftrec.impl.disable.cache")
+    }
   }
 
   test("Layout.zorderBy: exactly one exchange (the range partitioning " +
@@ -601,15 +650,20 @@ class PlanShapeSpec extends SparkSpec {
     assert(!p.contains("SortMergeJoin"), p)
   }
 
-  test("q_mmr: the corpus streams ONCE past the broadcast query side, " +
-       "the pool pre-prunes as WindowGroupLimit, and only pooled rows " +
-       "(<= pool per query) reach the greedy MapGroups exchange") {
-    val p = plan("q_mmr")
-    assert("FileScan parquet".r.findAllIn(p).size == 2, p) // corpus + queries
-    assert("BroadcastNestedLoopJoin .*Cross".r.findFirstIn(p).isDefined, p)
-    assert(p.contains("WindowGroupLimit"), p)
-    assert(p.contains("MapGroups"), p)
-    assert(!p.contains("SortMergeJoin"), p)
+  test("q_mmr: the pool is one single-stage top-k job past the broadcast " +
+       "query side, and only pooled rows (<= pool per query) join their " +
+       "vectors back and reach the greedy MapGroups exchange") {
+    val (df, stages) = stagesOf("q_mmr")
+    // the queries' broadcast build and the pool scan
+    assert(stages.size == 2, stages)
+    assert(ran(stages, "BroadcastExchange") == 1, stages)
+    assert(ran(stages, "Exchange") == 0 && ran(stages, "Window") == 0, stages)
+    val p = df.queryExecution.executedPlan.toString
+    // the local pool broadcasts into the one corpus read of the walk
+    assert("FileScan parquet".r.findAllIn(p).size == 1, p)
+    assert("BroadcastHashJoin".r.findAllIn(p).size == 1, p)
+    assert(p.contains("LocalTableScan") && p.contains("MapGroups"), p)
+    assert(!p.contains("Window") && !p.contains("SortMergeJoin"), p)
   }
 
   test("q_dedup_minhash_idx: every join is broadcast (candidates and the " +

@@ -14,15 +14,27 @@ trait SparkSpec extends AnyFunSuite {
     * when unset) of every Spark job that started while it ran.
     */
   def withJobLabels[A](f: => A): (A, Seq[String]) = {
+    val (out, jobs) = withJobs(f)
+    (out, jobs.map(_.label))
+  }
+
+  /** `f`'s result with every Spark job that started while it ran, in
+    * start order.
+    */
+  def withJobs[A](f: => A): (A, Seq[SparkSpec.Job]) = {
     import org.apache.spark.graftbridge.ListenerBridge.waitUntilEmpty
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.scheduler._
     val sc = spark.sparkContext
-    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val started = new java.util.concurrent.ConcurrentLinkedQueue[(String, Seq[Int])]()
+    val ran = new java.util.concurrent.ConcurrentHashMap[Int, Set[String]]()
     val listener = new SparkListener {
       override def onJobStart(j: SparkListenerJobStart): Unit =
-        jobs.add(Option(j.properties)
+        started.add(Option(j.properties)
           .flatMap(p => Option(p.getProperty("spark.job.description")))
-          .getOrElse(""))
+          .getOrElse("") -> j.stageIds)
+      override def onStageCompleted(s: SparkListenerStageCompleted): Unit =
+        ran.put(s.stageInfo.stageId,
+          s.stageInfo.rddInfos.flatMap(_.scope.map(_.name)).toSet)
     }
     waitUntilEmpty(sc)
     sc.addSparkListener(listener)
@@ -33,11 +45,26 @@ trait SparkSpec extends AnyFunSuite {
         sc.removeSparkListener(listener)
       }
     import scala.jdk.CollectionConverters._
-    (out, jobs.asScala.toSeq)
+    (out, started.asScala.toSeq.map { case (label, ids) =>
+      SparkSpec.Job(label, ids.flatMap(id => Option(ran.get(id)).map(id -> _)).toMap)
+    })
   }
 }
 
 object SparkSpec {
+  /** A started job: its description, and each of its stages that ran
+    * (skipped ones left out) by id, with the operator scopes of the
+    * stage's RDDs (`Scan parquet …`, `Exchange`, `BroadcastExchange`,
+    * `Window`, …).
+    */
+  final case class Job(label: String, stages: Map[Int, Set[String]])
+
+  /** The distinct stages that ran in `jobs`, in id order, as operator
+    * scopes.
+    */
+  def stages(jobs: Seq[Job]): Seq[Set[String]] =
+    jobs.flatMap(_.stages).toMap.toSeq.sortBy(_._1).map(_._2)
+
   lazy val session: SparkSession = {
     // catalog state (bucketed saveAsTable) goes to temp dirs, not the repo
     val tmp = java.nio.file.Files.createTempDirectory("graft_spark").toString

@@ -139,6 +139,120 @@ class SimilaritySpec extends SparkSpec {
         s"missing cell nprobe=$nprobe k=$k")
   }
 
+  private val LabelledSchema = org.apache.spark.sql.types.StructType.fromDDL(
+    "vec_id long, embedding array<float>, label string")
+
+  private def labelled(rows: (Long, Seq[Float], String)*) =
+    spark.createDataFrame(
+      java.util.Arrays.asList(rows.map { case (id, v, l) =>
+        org.apache.spark.sql.Row(id, v, l) }: _*), LabelledSchema)
+
+  test("every top-k site equals its window reference row for row: score " +
+       "ties, NULL embeddings on both sides, a repeated qid, k = 0, k " +
+       "past the candidates") {
+    // 10/11 and 16/17 are exact copies (score ties), 12 has no
+    // embedding and 18 no label; query 10 is also a corpus id, 100 has
+    // no embedding, and 103 appears twice with different vectors and
+    // labels (one heap per qid)
+    val corpus = labelled(
+      (0L, Seq(0.9f, 0.1f, 0f, 0f), "a"), (1L, Seq(0.1f, 0.9f, 0f, 0f), "b"),
+      (2L, Seq(0f, 0f, 0.9f, 0.1f), "a"), (3L, Seq(0f, 0f, 0.1f, 0.9f), "b"),
+      (10L, Seq(0.5f, 0.5f, 0f, 0f), "a"), (11L, Seq(0.5f, 0.5f, 0f, 0f), "b"),
+      (12L, null, "a"), (13L, Seq(0.2f, 0.1f, 0.7f, 0f), "b"),
+      (14L, Seq(0f, 0.3f, 0.3f, 0.3f), "a"), (15L, Seq(0.6f, 0f, 0f, 0.4f), "b"),
+      (16L, Seq(0f, 0f, 0.5f, 0.5f), "a"), (17L, Seq(0f, 0f, 0.5f, 0.5f), "b"),
+      (18L, Seq(0.3f, 0.3f, 0.3f, 0.3f), null),
+      (19L, Seq(-0.5f, 0.2f, 0.1f, 0f), "a"))
+    val qs = labelled((10L, Seq(0.5f, 0.5f, 0f, 0f), "a"), (100L, null, "b"),
+      (101L, Seq(0.4f, 0.4f, 0.1f, 0.1f), "a"),
+      (102L, Seq(0f, 0f, 0.3f, 0.3f), "b"),
+      (103L, Seq(1f, 0f, 0f, 0f), "a"), (103L, Seq(0f, 0f, 0f, 1f), "b"))
+    val pqPath = java.nio.file.Files.createTempDirectory("graft_pq_ref").toString
+    Similarity.buildPqIndex(corpus, pqPath, subspaces = 2, dim = 4, nCodes = 4)
+    val sqPath = java.nio.file.Files.createTempDirectory("graft_sq_ref").toString
+    Similarity.buildSqIndex(corpus, sqPath, dim = 4)
+    for (k <- Seq(0, 1, 3, 50)) {
+      def same(site: String, got: => org.apache.spark.sql.DataFrame,
+               want: org.apache.spark.sql.DataFrame): Unit = {
+        val w = rows(want)
+        assert(w.nonEmpty == (k > 0), s"$site k=$k: $w")
+        assert(rows(got) == w, s"$site k=$k")
+      }
+      same("bruteForceTopK", Similarity.bruteForceTopK(qs, corpus, k),
+        TopKReference.bruteForce(qs, corpus, k))
+      val pq = TopKReference.pqOverIndex(qs, pqPath, k, subspaces = 2, dim = 4)
+      same("pqTopK", Similarity.pqTopK(qs, corpus, k, subspaces = 2, dim = 4,
+        nCodes = 4), pq)
+      same("pqTopKIndexed", Similarity.pqTopKIndexed(qs, pqPath, k,
+        subspaces = 2, dim = 4), pq)
+      val sq = TopKReference.sqOverIndex(qs, sqPath, k, dim = 4)
+      same("sqTopK", Similarity.sqTopK(qs, corpus, k, dim = 4), sq)
+      same("sqTopKIndexed", Similarity.sqTopKIndexed(qs, sqPath, k, dim = 4), sq)
+      same("lshTopK", Similarity.lshTopK(qs, corpus, k, bits = 4, bands = 2,
+        dim = 4), TopKReference.lsh(qs, corpus, k, bits = 4, bands = 2, dim = 4))
+      same("hardNegatives", Similarity.hardNegatives(qs, corpus, k),
+        TopKReference.hardNegatives(qs, corpus, k))
+      same("rpTopK", Similarity.rpTopK(qs, corpus, k, outDim = 2, inDim = 4),
+        TopKReference.rp(qs, corpus, k, outDim = 2, inDim = 4))
+      // both require k >= 1
+      if (k > 0) {
+        same("rpRerankTopK", Similarity.rpRerankTopK(qs, corpus, k,
+          pool = k + 2, outDim = 2, inDim = 4),
+          TopKReference.rpRerank(qs, corpus, k, k + 2, outDim = 2, inDim = 4))
+        same("mmrTopK", Similarity.mmrTopK(qs, corpus, k, pool = k + 2),
+          TopKReference.mmr(qs, corpus, k, k + 2, lamNum = 7, lamDen = 10))
+      }
+    }
+    // the fixture reaches the NULL order: NULL scores rank last, by cid
+    val wide = rows(Similarity.bruteForceTopK(qs, corpus, k = 50))
+    assert(wide.filter(_(0) == 100L).map(_(3)).distinct == Seq(null))
+    assert(wide.filter(_(0) == 101L).last == Seq(101L, 14, 12L, null))
+    // k < 1 runs no job
+    assert(withJobLabels(Similarity.bruteForceTopK(qs, corpus, 0))._2.isEmpty)
+  }
+
+  test("mmrTopK: a NULL embedding in the pool drops before the greedy " +
+       "walk (it has no relevance and no similarity)") {
+    val corpus = vectors(0L -> Seq(0.9f, 0.1f), 1L -> Seq(0.5f, 0.5f),
+      2L -> Seq(0.1f, 0.9f), 3L -> null)
+    val q = corpus.filter(col("vec_id") === 1L)
+    // plain top-k ranks the NULL-scored vector last
+    assert(rows(Similarity.bruteForceTopK(q, corpus, k = 3)).last ==
+      Seq(1L, 3, 3L, null))
+    val wide = rows(Similarity.mmrTopK(q, corpus, k = 2, pool = 5))
+    assert(wide.map(_(2)).toSet == Set(0L, 2L))
+    assert(wide == rows(Similarity.mmrTopK(q, corpus, k = 2, pool = 2)))
+    // a query without an embedding has no relevant candidate
+    assert(Similarity.mmrTopK(corpus.filter(col("vec_id") === 3L), corpus,
+      k = 2, pool = 5).count() == 0)
+  }
+
+  test("PQ and SQ8 index artifacts are read with declared schemas: " +
+       "append and query run no schema-inference job") {
+    val vecs = e.select("vec_id", "embedding")
+    val local = spark.createDataFrame(
+      vecs.filter(col("vec_id") < 10).collect().toSeq.asJava, vecs.schema)
+    val (built, added) =
+      (vecs.filter(col("vec_id") < 400), vecs.filter(col("vec_id") >= 400))
+    val pq = java.nio.file.Files.createTempDirectory("graft_pq_jobs").toString
+    val sq = java.nio.file.Files.createTempDirectory("graft_sq_jobs").toString
+    Similarity.buildPqIndex(built, pq)
+    Similarity.buildSqIndex(built, sq)
+    def jobs(f: => Any): Int = withJobLabels(f)._2.size
+    // the codebook's broadcast build, the encode argmin's shuffle and
+    // the write
+    assert(jobs(Similarity.appendToPqIndex(added, pq)) == 3)
+    // the stats collect and the write
+    assert(jobs(Similarity.appendToSqIndex(added, sq)) == 2)
+    // the codebook and LUT broadcast builds, the ADC sum's shuffle and
+    // the top-k
+    assert(jobs(Similarity.pqTopKIndexed(local, pq, k = 5)) == 4)
+    // the stats collect, the query broadcast and the top-k scan
+    assert(jobs(Similarity.sqTopKIndexed(local, sq, k = 5)) == 3)
+    assert(Similarity.pqTopKIndexed(local, pq, k = 5).count() == 50)
+    assert(Similarity.sqTopKIndexed(local, sq, k = 5).count() == 50)
+  }
+
   test("IVF index freshness: a query sees vectors appended after the " +
        "previous query, and a rebuild's new centroids") {
     val vecs = e.select("vec_id", "embedding")
