@@ -4433,16 +4433,13 @@ object SparkEntry {
       |FROM tree GROUP BY depth ORDER BY depth""".stripMargin
 
   /** Key cap for [[recursiveTreeCensus]]'s driver tier: customer keys
-    * collect as ONE primitive long array (8 B/key + row framing — tens
-    * of MB at the cap), the depth walk is a sorted-array binary-search
-    * fold, and the result is a ≤64-row LocalRelation. Above the cap —
-    * or on a duplicate key set, whose UNION ALL multiplicities the
-    * local walk does not model — the Spark 4 WITH RECURSIVE plan runs
-    * unchanged. Rationale (guide §1.2, the PageRank/CC regime-switch
-    * device): the distributed walk is one join + localLimit barrier per
-    * tree LEVEL (~log2 |customer| ≈ 14 jobs at sf0.1) over a table that
-    * fits the driver outright; measured 1.91 s min at sf0.1 of which
-    * ~95% is per-iteration scheduling constants.
+    * fold into ONE primitive long array (8 B/key — tens of MB at the
+    * cap), the depth walk is a sorted-array binary-search fold, and the
+    * result is a ≤64-row LocalRelation. Above the cap — or on a
+    * duplicate key set, whose UNION ALL multiplicities the local walk
+    * does not model — the Spark 4 WITH RECURSIVE plan runs unchanged.
+    * The distributed walk is one join + localLimit barrier per tree
+    * LEVEL (~14 jobs at sf0.1, ~95% scheduling constants).
     */
   private[graft] val RecursiveLocalMaxKeys = 2000000L
 
@@ -4492,28 +4489,26 @@ object SparkEntry {
 
   /** q_sql_recursive execution tier. The SQL text stays the contract
     * (and the oracle); below [[RecursiveLocalMaxKeys]] the same census
-    * is computed on the driver — one footer count + one key collect
-    * replace ~14 per-level join jobs — and returned as a LocalRelation
-    * carrying the SQL plan's OWN analyzed schema, so names, types and
-    * nullability cannot drift. SqlRecursiveSpec pins local == SQL on
-    * contiguous, gapped, rootless and adversarial key sets.
+    * is computed on the driver — one bounded key collect, which is also
+    * the gate, replaces ~14 per-level join jobs — and returned as a
+    * LocalRelation carrying the SQL plan's OWN analyzed schema, so
+    * names, types and nullability cannot drift. SqlRecursiveSpec pins
+    * local == SQL on contiguous, gapped, rootless and adversarial key
+    * sets.
     */
   private[graft] def recursiveTreeCensus(s: SparkSession): DataFrame = {
     lazy val sql = s.sql(recursiveSql)
-    val cust = s.table("customer")
-    if (cust.count() > RecursiveLocalMaxKeys) sql
-    else {
-      val keys = cust.filter(col("c_custkey").isNotNull)
-        .select(col("c_custkey").cast("long"))
-        .as(org.apache.spark.sql.Encoders.scalaLong).collect()
-      localTreeCensus(keys) match {
-        case None => sql
-        case Some(rows) =>
-          val out = rows.map { case (d, n, ks) =>
-            org.apache.spark.sql.Row(d, n, ks): org.apache.spark.sql.Row
-          }
-          s.createDataFrame(java.util.Arrays.asList(out: _*), sql.schema)
-      }
+    graft.engine.DriverTier.collect(
+        s.table("customer").select(col("c_custkey").cast("long")),
+        RecursiveLocalMaxKeys, "graft.recursive: driver tier collect")
+      .flatMap(rows => localTreeCensus(
+        rows.filterNot(_.isNullAt(0)).map(_.getLong(0)))) match {
+      case None => sql
+      case Some(rows) =>
+        val out = rows.map { case (d, n, ks) =>
+          org.apache.spark.sql.Row(d, n, ks): org.apache.spark.sql.Row
+        }
+        s.createDataFrame(java.util.Arrays.asList(out: _*), sql.schema)
     }
   }
 

@@ -131,39 +131,47 @@ object Readers {
   }
 
   /** Parquet reader resilient to TIMESTAMP(NANOS) columns, which Spark 4
-    * rejects outright (PARQUET_TYPE_ILLEGAL). The footer of the first
-    * data file names the nanos columns; those are read as raw longs
-    * (`nanosAsLong`) and truncated to Spark's native microsecond
-    * timestamps — same behavior as DuckDB's `CAST(ts AS TIMESTAMP)`, so
-    * oracle comparisons line up.
+    * rejects outright (PARQUET_TYPE_ILLEGAL). The footer of the file
+    * Spark's inference reads names the nanos columns; those are read as
+    * raw longs (`nanosAsLong`) and truncated to Spark's native
+    * microsecond timestamps — same behavior as DuckDB's
+    * `CAST(ts AS TIMESTAMP)`, so oracle comparisons line up. The same
+    * footer, opened once per call, gives the schema as Spark's inference
+    * converts it, so the read runs no inference job; Spark still infers
+    * when the options merge schemas or filter the listing.
     */
-  /** Footer probe results per path — the probe is a driver-side file read
-    * and every query re-opens the same testdata paths.
-    */
-  private val nanosCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[String]]()
-
   def readParquet(spark: SparkSession, path: String,
                   options: Map[String, String] = Map.empty): DataFrame = {
-    val nanos = nanosCache.computeIfAbsent(path,
-      p => nanosTimestampColumns(spark, p))
-    // CONTRACT NOTE (deliberate session-wide set, never restored): the
-    // flag cannot be scoped to this read — Spark re-reads it from the
-    // session conf at every physical planning of the lazy DataFrame
-    // (ParquetReadSupport re-converts the footer schema per scan), so a
-    // set-and-restore here would make the returned frame throw
-    // PARQUET_TYPE_ILLEGAL on its first action. Leaving it set is safe:
-    // the flag only changes how TIMESTAMP(NANOS) parquet columns read
-    // (raw long instead of hard error; non-nanos data is untouched),
-    // and every library read path lands here, where nanos longs are
-    // immediately truncated to microsecond timestamps below. The one
-    // observable: a session that first reads a nanos file through this
-    // reader and then calls spark.read.parquet DIRECTLY on another
-    // nanos file gets raw longs instead of Spark 4's error — strictly
-    // more permissive, never silently different values.
+    import org.apache.parquet.schema.LogicalTypeAnnotation.{TimeUnit,
+      TimestampLogicalTypeAnnotation => Ts}
+    import org.apache.spark.sql.execution.datasources.parquet._
+    import scala.jdk.CollectionConverters._
+    val footer = firstFooter(spark, path, options)
+    val nanos = footer.toSeq.flatMap(_.getParquetMetadata.getFileMetaData
+      .getSchema.getFields.asScala.collect {
+        case f if f.isPrimitive && (f.getLogicalTypeAnnotation match {
+          case t: Ts => t.getUnit == TimeUnit.NANOS
+          case _ => false
+        }) => f.getName
+      })
+    // CONTRACT NOTE: the flag is set session-wide and never restored.
+    // Spark re-reads it at every physical planning of the lazy frame, so
+    // a set-and-restore would make the returned frame throw
+    // PARQUET_TYPE_ILLEGAL on its first action. It only changes how
+    // TIMESTAMP(NANOS) columns read (raw long instead of an error): a
+    // later direct spark.read.parquet of another nanos file gets raw
+    // longs instead of Spark 4's error, never different values.
     if (nanos.nonEmpty)
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = spark.read.options(options).parquet(path)
+    val reader = spark.read.options(options)
+    val listing = Seq("pathglobfilter", "recursivefilelookup",
+      "modifiedbefore", "modifiedafter").exists(k => options.keys.exists(
+        _.equalsIgnoreCase(k)))
+    if (footer.nonEmpty && !listing &&
+        !new ParquetOptions(options, spark.sessionState.conf).mergeSchema)
+      reader.schema(ParquetFileFormat.readSchemaFromFooter(footer.get,
+        new ParquetToSparkSchemaConverter(spark.sessionState.conf)))
+    val raw = reader.parquet(path)
     val denanosed = nanos.foldLeft(raw) { (df, c) =>
       // integer `div`, not `/` — double division would lose µs precision
       // on ~1.7e18 nanosecond values (> 2^53)
@@ -202,40 +210,36 @@ object Readers {
     }
   }
 
-  /** Top-level TIMESTAMP(NANOS) column names from the parquet footer of
-    * the first data file under `path` (file or directory).
+  /** The footer of the file Spark's schema inference reads: `path`
+    * itself, or a directory's first data file by path; `None` for a
+    * directory with subdirectories or summary files (a hive-partitioned
+    * table), a glob, or a path that cannot be read.
     */
-  private def nanosTimestampColumns(spark: SparkSession,
-                                    path: String): Seq[String] = {
-    import org.apache.parquet.schema.LogicalTypeAnnotation
-    import org.apache.parquet.schema.LogicalTypeAnnotation.TimeUnit
+  private def firstFooter(spark: SparkSession, path: String,
+      options: Map[String, String]): Option[org.apache.parquet.hadoop.Footer] =
     try {
-      val hconf = spark.sessionState.newHadoopConf()
+      val hconf = spark.sessionState.newHadoopConfWithOptions(options)
       val p = new org.apache.hadoop.fs.Path(path)
       val fs = p.getFileSystem(hconf)
-      val file =
-        if (fs.getFileStatus(p).isDirectory)
-          fs.listStatus(p).map(_.getPath)
-            .find(f => f.getName.endsWith(".parquet") &&
-              !f.getName.startsWith("_"))
-            .getOrElse(return Nil)
-        else p
-      val in = org.apache.parquet.hadoop.util.HadoopInputFile
-        .fromPath(file, hconf)
-      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-      try {
-        import scala.jdk.CollectionConverters._
-        reader.getFooter.getFileMetaData.getSchema.getFields.asScala.collect {
-          case f if f.isPrimitive &&
-            (f.getLogicalTypeAnnotation match {
-              case t: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation =>
-                t.getUnit == TimeUnit.NANOS
-              case _ => false
-            }) => f.getName
-        }.toSeq
-      } finally reader.close()
-    } catch { case _: Exception => Nil }
-  }
+      // Spark's listing skips '_' and '.' names and in-flight copies, but
+      // keeps the summary files
+      val listed =
+        if (!fs.getFileStatus(p).isDirectory) Array(fs.getFileStatus(p))
+        else fs.listStatus(p).filter { st =>
+          val n = st.getPath.getName
+          !(n.startsWith("_") && !n.contains("=")) && !n.startsWith(".") &&
+            !n.endsWith("._COPYING_") || n.startsWith("_metadata") ||
+            n.startsWith("_common_metadata")
+        }
+      if (listed.exists(st => st.isDirectory ||
+          st.getPath.getName.startsWith("_"))) None
+      else listed.map(_.getPath).sortBy(_.toString).headOption.map { f =>
+        val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(f, hconf))
+        try new org.apache.parquet.hadoop.Footer(f, reader.getFooter)
+        finally reader.close()
+      }
+    } catch { case _: Exception => None }
 
   /** The events table (TIMESTAMP(NANOS) `ts` handled by readParquet). */
   def events(spark: SparkSession, sfDir: String): DataFrame =

@@ -129,33 +129,16 @@ object Bpe {
     val base = wordFreq(docs, scriptAware)
       .select(col("word"), col("freq"), split(col("word"), "").as("syms"))
       .localCheckpoint(true)
-    // Regime switch (guide §1.2, the Unigram.train device): the merge
-    // loop is vocabulary-bounded by construction and its per-iteration
-    // job is ~100 ms of scheduling/planning constants over microseconds
-    // of compute. Under the caps the base collects once and the loop
-    // runs on the driver — bit-identical by the BpeSpec law (exact
-    // integer counts, UTF-8-binary tie order, the SAME MergeListFold
-    // rewrite kernel). Past the caps the distributed loop is unchanged
-    // (the 100 TB regime: the one corpus-scale pass is wordFreq either
-    // way, and a giant vocabulary stays out of the driver).
-    val g = base.agg(count(lit(1)).as("nw"),
-      sum(size(col("syms")).cast("long")).as("ns")).head()
-    val nWords = g.getLong(0)
-    val nSyms = if (g.isNullAt(1)) 0L else g.getLong(1)
-    if (nWords <= LocalTrainMaxWords && nSyms <= LocalTrainMaxSyms)
-      trainMergesLocal(docs.sparkSession, MergeLoop.collect(base),
-        base.schema, iters)
-    else trainMergesDistributed(docs.sparkSession, base, iters)
+    // Driver tier (MergeLoop): the merge loop is vocabulary-bounded and
+    // each distributed iteration is ~100 ms of scheduling constants over
+    // microseconds of compute; bit-identical by the BpeSpec law. Past
+    // the caps the distributed loop is unchanged (the 100 TB regime).
+    MergeLoop.collect(base, "graft.bpe: driver tier collect") match {
+      case Some(words) =>
+        trainMergesLocal(docs.sparkSession, words, base.schema, iters)
+      case None => trainMergesDistributed(docs.sparkSession, base, iters)
+    }
   }
-
-  /** Distinct-word / total-symbol caps under which [[trainMerges]] runs
-    * its loop on the driver (shared with [[WordPiece.trainMerges]]).
-    * Sized like [[Unigram.LocalTrainMaxWords]]: the collected base is
-    * ~40-60 B per single-character UTF8String, so the cap keeps the
-    * driver copy under ~100 MB.
-    */
-  private[operators] val LocalTrainMaxWords = 250000L
-  private[operators] val LocalTrainMaxSyms = 1000000L
 
   /** Driver mirror of [[trainMergesDistributed]] over the collected
     * base — bit-identical by construction, pinned by the BpeSpec law:

@@ -8,6 +8,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.RelationBridge
 import org.apache.spark.sql.types.{ByteType, IntegerType, LongType,
   ShortType}
+import graft.engine.DriverTier
+import graft.engine.DriverTier.labeled
 import graft.functions.StableHash._
 import graft.operators.TextAnalysis.shingleHashes
 
@@ -29,20 +31,6 @@ import graft.operators.TextAnalysis.shingleHashes
   *     coarse quantizer cell) with exact integer-quantized verification.
   */
 object Dedup {
-
-  /** Label the Spark jobs an action-bearing block triggers (driver
-    * thread-local, saved/restored) so the UI and any
-    * SparkListener-based profiler can attribute stages to pipeline
-    * tiers instead of thread-pool frames — AQE's exchange jobs inherit
-    * the submitting thread's local properties, so the label survives
-    * them too. Pure metadata: no effect on results or plans.
-    */
-  private def labeled[A](df: DataFrame, desc: String)(f: => A): A = {
-    val sc = df.sparkSession.sparkContext
-    val prev = sc.getLocalProperty("spark.job.description")
-    sc.setJobDescription(desc)
-    try f finally sc.setJobDescription(prev)
-  }
 
   /** Exact dedup: keep the lowest id per key. One shuffle. */
   def exact(df: DataFrame, key: String, id: String): DataFrame =
@@ -1386,7 +1374,6 @@ object Dedup {
                      col("d2").cast("long").as("b")))
         .localCheckpoint(true)
     }
-    var nEdges = edges.count()
     // Per-partition spanning-forest contraction (see Scaladoc): a local
     // union-find per partition, emitting one (root, member) edge per
     // non-root node. Union is by MIN root, so emitted edges stay
@@ -1406,7 +1393,14 @@ object Dedup {
         }
         .toDF("a", "b")
     }
-    if (nEdges > smallGraphThreshold)
+    // Near-dup graphs are tiny relative to the corpus (pairs, not docs):
+    // below the threshold (the bounded collect is the gate) a driver-side
+    // union-find resolves components in ONE pass instead of O(log n)
+    // shuffle rounds. Past it the contraction rounds run, each steered by
+    // a count; a forest counted under the threshold then collects.
+    val driverEdges = DriverTier.collect(edges, smallGraphThreshold,
+      "graft.cc: driver union-find collect").orElse {
+      var nEdges = 0L
       labeled(pairs, "graft.cc: forest contraction") {
         // round 1: in place, zero shuffle — on dense graphs this alone
         // cuts edges to ~nodes per partition
@@ -1428,19 +1422,18 @@ object Dedup {
           nEdges = edges.count()
         }
       }
-    // Near-dup graphs are tiny relative to the corpus (pairs, not docs):
-    // below the threshold a driver-side union-find resolves components in
-    // ONE pass instead of O(log n) shuffle rounds. The count is a cheap
-    // scan of the checkpointed blocks, so nothing is ever collected to
-    // the driver unless the graph is confirmed small.
-    if (nEdges <= smallGraphThreshold) {
+      if (nEdges > smallGraphThreshold) None
+      else Some(labeled(pairs, "graft.cc: driver union-find collect") {
+        RelationBridge.collectInternal(edges)
+      })
+    }
+    if (driverEdges.nonEmpty) {
       import spark.implicits._
-      val es = labeled(pairs, "graft.cc: driver union-find collect") {
-        edges.collect().map(r => (r.getLong(0), r.getLong(1)))
-      }
+      val rows = driverEdges.get
       val uf = new MinRootUnionFind
-      es.foreach { case (a, b) => uf.union(a, b) }
-      val nodes = es.iterator.flatMap(e => Iterator(e._1, e._2)).toSet
+      rows.foreach(r => uf.union(r.getLong(0), r.getLong(1)))
+      val nodes = rows.iterator
+        .flatMap(r => Iterator(r.getLong(0), r.getLong(1))).toSet
       return nodes.toSeq.sorted
         .map(n => (n, uf.find(n))).toDF("node", "component")
         .repartition(spark.sparkContext.defaultParallelism)
@@ -1547,11 +1540,9 @@ object Dedup {
     *
     * Corpora of at most [[SmallCorpusDocs]] documents whose size
     * estimate is within `1 / SmallCorpusHeapShare` of the driver heap
-    * run on the driver: ONE
-    * job collects every row's own columns with its id as a long and its
-    * shingle hash set, and that job is also the size gate
-    * (`coalesce(1).limit(SmallCorpusDocs + 1)` stops reading past the
-    * bound). The pairs are found with the AllPairs prefix filter and an
+    * run on the driver: ONE bounded collect ([[graft.engine.DriverTier]],
+    * also the size gate) fetches every row's own columns with its id as
+    * a long and its shingle hash set. The pairs are found with the AllPairs prefix filter and an
     * exact sorted-set intersect, the components with the min-root
     * union-find, and the surviving rows return as a local relation with
     * `docs`' schema — the pair pipeline, edge checkpoint and canonical
@@ -1593,26 +1584,22 @@ object Dedup {
       return distributed(corpusCount(docs, -1L))
     // docs' own columns, then (id as long, shingle set)
     val at = docs.schema.length
-    val gate = math.min(driverDocs, Int.MaxValue - 1L).toInt + 1
-    val rows = labeled(docs, "graft.dedup: driver tier collect") {
-      RelationBridge.collectInternal(docs.select(col("*"),
-          col(id).cast("long"), shingleHashes(col("text"), k))
-        .coalesce(1).limit(gate))
-    }
-    val dropped =
-      if (rows.length > driverDocs) None else droppedIdsLocal(rows, at, tau)
-    dropped match {
+    val rows = DriverTier.collect(docs.select(col("*"),
+        col(id).cast("long"), shingleHashes(col("text"), k)),
+      driverDocs, "graft.dedup: driver tier collect")
+    rows.flatMap(droppedIdsLocal(_, at, tau)) match {
       case Some(ids) =>
         // an integral id's long cast compares as `isin` on the id would
         val payload = UnsafeProjection.create(
           docs.schema.fields.toSeq.zipWithIndex.map { case (f, i) =>
             BoundReference(i, f.dataType, f.nullable) })
-        val kept = rows.iterator
+        val kept = rows.get.iterator
           .filter(r => !r.isNullAt(at) &&
             java.util.Arrays.binarySearch(ids, r.getLong(at)) < 0)
           .map(r => payload(r).copy(): InternalRow).toSeq
         RelationBridge.localDf(docs.sparkSession, docs.schema, kept)
-      case None => distributed(rows.length.toLong)
+      // past the gate the collect stopped at driverDocs + 1 rows
+      case None => distributed(rows.fold(driverDocs + 1)(_.length.toLong))
     }
   }
 

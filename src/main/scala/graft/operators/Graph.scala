@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
+import graft.engine.DriverTier
 
 import scala.collection.mutable
 
@@ -87,13 +88,9 @@ object Graph {
     require(iters >= 1, s"iters must be >= 1, got $iters")
     require(damping > 0.0 && damping < 1.0,
       s"damping must be in (0,1), got $damping")
-    // materialize the caller's edge pipeline ONCE: deg, the node set
-    // and the iteration state each run their own jobs, and without the
-    // barrier every one of them re-computed the (possibly expensive)
-    // upstream pair/knn gate — q_pagerank was paying its knnGraph
-    // three times over (measured ~1 s each at sf0.1). persist (not
-    // localCheckpoint) so the O(E) blocks are RELEASED in the finally
-    // below — a bench session runs many graph queries back to back.
+    // materialize the caller's edge pipeline ONCE (deg, the node set and
+    // the iterations would each re-run its upstream knn gate); persist,
+    // not localCheckpoint, so the finally below RELEASES the O(E) blocks
     val ecp = edges.select(col("src"), col("dst"))
       .persist(StorageLevel.MEMORY_AND_DISK)
     val deg = ecp.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
@@ -104,11 +101,16 @@ object Graph {
       .distinct()
       .persist(StorageLevel.MEMORY_AND_DISK)
     try {
-      val n = nodes.count()
-      require(n > 0, "pageRank needs a non-empty edge list")
-      if (n <= driverNodeLimit)
-        pageRankDriver(e, nodes, n, iters, damping, localEdgeLimit)
-      else pageRankJoin(e, nodes, n, iters, damping)
+      // the node ids' bounded collect is the regime gate
+      DriverTier.collect(nodes.select(col("id").cast("long")),
+          driverNodeLimit, "graft.pagerank: driver tier collect") match {
+        case Some(rows) =>
+          require(rows.nonEmpty, "pageRank needs a non-empty edge list")
+          require(!rows.exists(_.isNullAt(0)), "pageRank needs non-null ids")
+          pageRankDriver(e, rows.map(_.getLong(0)).sorted, iters, damping,
+            localEdgeLimit)
+        case None => pageRankJoin(e, nodes, nodes.count(), iters, damping)
+      }
     } finally {
       nodes.unpersist(blocking = false)
       ecp.unpersist(blocking = false)
@@ -118,13 +120,11 @@ object Graph {
   /** Broadcast-rank regime: ranks in a driver array (n ≤ driver limit),
     * one zero-shuffle scan of the cached edge RDD per iteration.
     */
-  private def pageRankDriver(e: DataFrame, nodes: DataFrame, n: Long,
+  private def pageRankDriver(e: DataFrame, ids: Array[Long],
                              iters: Int, damping: Double,
                              localEdgeLimit: Long): DataFrame = {
     val spark = e.sparkSession
     import spark.implicits._
-    val ids = nodes.select(col("id").cast("long")).as[Long]
-      .collect().sorted
     val idx = new mutable.LongMap[Int](ids.length * 2)
     ids.zipWithIndex.foreach { case (id, i) => idx.put(id, i) }
     val bIdx = spark.sparkContext.broadcast(idx)
@@ -137,17 +137,14 @@ object Graph {
       .persist(StorageLevel.MEMORY_AND_DISK)
     try {
       val nn = ids.length
-      val base = (1.0 - damping) / n
-      var rank = Array.fill(nn)(1.0 / n)
+      val base = (1.0 - damping) / nn
+      var rank = Array.fill(nn)(1.0 / nn)
       val sc = spark.sparkContext
-      // LOCAL tier (the connectedComponents driver-union-find device):
-      // near-dup/knn graphs are pair-scale, and under `LocalEdges`
-      // triples (~100 MB at the cap) the whole iteration loop runs on
-      // collected arrays — ZERO jobs per iteration instead of one
-      // treeAggregate each. The arithmetic is the identical
-      // floor-quantized integer fold, so ranks are bit-equal to the
-      // distributed regime (GraphSpec pins the tier law); the count
-      // probe is one cheap job over the already-persisted triples.
+      // LOCAL tier: under `LocalEdges` triples the whole iteration loop
+      // runs on collected arrays — ZERO jobs per iteration instead of one
+      // treeAggregate each — with the identical floor-quantized integer
+      // fold (GraphSpec pins the tier law). It packs an RDD, not a frame,
+      // so its gate is a count of the persisted triples.
       val eCount = eRdd.count()
       if (eCount <= localEdgeLimit) {
         // collect as three flat primitive arrays packed per partition —

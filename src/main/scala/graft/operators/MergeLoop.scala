@@ -5,43 +5,47 @@ import org.apache.spark.sql.catalyst.expressions.{BoundReference, GenericInterna
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
+import graft.engine.DriverTier
 
-/** Driver-side primitives shared by the [[Bpe]] and [[WordPiece]]
-  * merge-training local tiers (guide §1.2 — the PageRank / CC /
-  * q_sql_recursive / Unigram regime-switch device): under the vocab
-  * caps the checkpointed (word, freq, syms) base collects ONCE and the
-  * k merge iterations run on the driver with zero jobs, instead of 1-2
-  * vocab-bounded jobs per iteration whose wall clock is ~95%
-  * scheduling/planning constants (measured: q_wordpiece_encode spends
-  * 2.5 s wall on < 0.3 executor-CPU-s).
+/** The driver tier shared by [[Bpe]] and [[WordPiece]] merge training:
+  * under the vocab caps the checkpointed (word, freq, syms) base arrives
+  * in ONE bounded collect that is also the gate
+  * ([[graft.engine.DriverTier]]), and the k merge iterations run on the
+  * driver with zero jobs instead of 1-2 vocab-bounded jobs each.
   *
-  * Bit-identity is engineered, not hoped:
-  *   - pair/unit counts are exact integer sums (accumulation order
-  *     immaterial);
-  *   - tie-breaks order symbols by UTF-8 BINARY comparison
-  *     (UTF8String.compareTo — Spark's string ordering; a
-  *     String.compareTo tie-break would diverge on supplementary-plane
-  *     characters, covered by the spec corpora);
-  *   - the greedy rewrite calls the SAME [[graft.plans.MergeListFold]]
-  *     kernel the distributed plans embed;
-  *   - the collected syms arrays come from Spark's own
-  *     `split(word, "")`, never re-derived locally.
+  * Bit-identity: counts are exact integer sums; tie-breaks compare
+  * symbols as UTF-8 BINARY (UTF8String.compareTo, Spark's string order;
+  * String.compareTo diverges on supplementary-plane characters); the
+  * rewrite calls the SAME [[graft.plans.MergeListFold]] kernel the
+  * distributed plans embed; the symbols are Spark's own
+  * `split(word, "")`, never re-derived locally.
   */
 private[operators] object MergeLoop {
 
   /** Mutable word entry: frequency plus the current symbol array. */
   final class WordSyms(val freq: Long, var syms: Array[UTF8String])
 
-  /** Collect a checkpointed (word, freq, syms) base. The word string
-    * itself is not needed by the loop but is kept for the returned
-    * segmentation table.
+  /** Word / symbol caps of the driver tier: the collected base is
+    * ~40-60 B per single-character symbol, so the driver copy stays
+    * under ~100 MB.
     */
-  def collect(base: DataFrame): Array[(String, WordSyms)] =
-    base.collect().map { r =>
-      val syms = r.getSeq[String](2).iterator
-        .map(UTF8String.fromString).toArray
-      (r.getString(0), new WordSyms(r.getLong(1), syms))
-    }
+  val MaxWords = 250000L
+  val MaxSyms = 1000000L
+
+  /** The base's words with their collected UTF8String symbols (the word
+    * string is kept for the segmentation table), or `None` past
+    * [[MaxWords]] words or [[MaxSyms]] symbols.
+    */
+  def collect(base: DataFrame,
+              label: String): Option[Array[(String, WordSyms)]] =
+    DriverTier.collect(base, MaxWords, label)
+      .filter(_.iterator.map(_.getArray(2).numElements().toLong).sum <=
+        MaxSyms)
+      .map(_.map { r =>
+        val syms = r.getArray(2)
+        (r.getUTF8String(0).toString, new WordSyms(r.getLong(1),
+          Array.tabulate(syms.numElements())(syms.getUTF8String)))
+      })
 
   /** Frequency-weighted, overlap-inclusive adjacent-pair counts — the
     * local mirror of `explode(AdjacentPairs(syms))` + `sum(freq)`.

@@ -2,6 +2,8 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.RelationBridge
+import graft.engine.DriverTier
 import graft.functions.StableHash.stableHash60
 
 /** Text-analysis operators for LLM training-data pipelines: tokenization,
@@ -593,6 +595,21 @@ object TextAnalysis {
     // (plans.AdjacentPairs — same rows, same order)
     graft.plans.AdjacentPairs.concatenated(tokens(text))
 
+  /** LM-table rows under which the scoring join-back ships the LM as a
+    * broadcast instead of exchanging the corpus bigram stream (shared
+    * by [[bigramCoverage]], [[lmPerplexity]], [[knPerplexity]]). The
+    * gate is one bounded collect of the checkpointed LM (DriverTier),
+    * whose rows feed the broadcast; 4M rows of (a, b, count) is ~100-200
+    * MB framed — inside every broadcast budget this engine already uses
+    * (cf. Dedup.BroadcastVerifyBytes).
+    * Past the gate the scoring join keeps the co-partitioned exchange
+    * shape — the 100 TB regime, where the LM is Zipf-truncatable but
+    * never broadcastable.
+    */
+  private[operators] val BroadcastLmRows = 4000000L
+
+  private val LmTierLabel = "graft.lm: driver tier collect"
+
   /** Bigram language-model coverage — a fluency/quality proxy that stays
     * integer-exact: build the corpus bigram table (the LM), then score
     * each document by the fraction of its bigram OCCURRENCES whose
@@ -602,44 +619,35 @@ object TextAnalysis {
     * cross-entropy (oracle-exact via per-term micro-nat quantization)
     * is [[lmPerplexity]].
     *
-    * Shape: one explode, one exchange. `bg` feeds BOTH the LM count and
-    * the probe side of the join-back, so it is repartitioned by bigram
-    * up front: exchange reuse then memoizes the exploded bigrams (one
-    * tokenization pass), the groupBy consumes the partitioning without a
-    * second shuffle, and the join finds both sides co-partitioned. At
-    * 100 TB the LM table is additionally Zipf-truncatable (drop the
-    * count-1 tail) — the standard n-gram-LM scoring layout.
+    * Shape: the LM is one aggregation of a narrow bigram stream,
+    * checkpointed; the join-back probes it as a broadcast under
+    * [[BroadcastLmRows]], else through one exchange of the stream. At
+    * 100 TB the LM table is Zipf-truncatable (drop the count-1 tail).
     */
-  /** LM-table rows under which the scoring join-back ships the LM as a
-    * broadcast instead of exchanging the corpus bigram stream (shared
-    * by [[bigramCoverage]], [[lmPerplexity]], [[knPerplexity]]). The
-    * gate is one tiny count over the already-checkpointed LM; 4M rows
-    * of (a, b, count) is ~100-200 MB framed — inside every broadcast
-    * budget this engine already uses (cf. Dedup.BroadcastVerifyBytes).
-    * Past the gate the scoring join keeps the co-partitioned exchange
-    * shape — the 100 TB regime, where the LM is Zipf-truncatable but
-    * never broadcastable.
-    */
-  private[operators] val BroadcastLmRows = 4000000L
+  def bigramCoverage(docs: DataFrame, minCount: Long = 3): DataFrame =
+    bigramCoverage(docs, minCount, BroadcastLmRows)
 
-  def bigramCoverage(docs: DataFrame, minCount: Long = 3): DataFrame = {
+  /** [[bigramCoverage]] with the LM gate as a parameter (law tests). */
+  private[operators] def bigramCoverage(docs: DataFrame, minCount: Long,
+                                        lmRows: Long): DataFrame = {
     // the bigram stream is built NARROW (tokenize off the scan); the LM
     // aggregation's exchange then carries map-side-combined (bigram,
     // partial count) rows — strictly fewer bytes than the raw stream a
-    // pinned byKey barrier used to push through the exchange. The LM is
-    // checkpointed once; when it fits the broadcast gate the join-back
-    // probes it map-side off a second narrow tokenize pass (measured
-    // cheaper than the exchange + two sort-merge sorts it replaces),
-    // else the probe side pays one explicit exchange (the at-scale
-    // shape, unchanged).
+    // pinned byKey barrier used to push through the exchange. Under the
+    // gate the join-back probes the collected LM map-side off a second
+    // narrow tokenize pass (measured cheaper than an exchange + two
+    // sorts); past it the probe side pays one exchange.
     def bg = graft.engine.Spread(docs).select(col("doc_id"),
       explode(bigramsOf(col("text"))).as("bigram"))
     val lm = bg.groupBy(col("bigram")).agg(count(lit(1)).as("c"))
       .localCheckpoint(true)
-    val scored =
-      if (lm.count() <= BroadcastLmRows) bg.join(broadcast(lm), Seq("bigram"))
-      else graft.engine.Spread.byKey(bg, col("bigram"))
+    val scored = DriverTier.collect(lm, lmRows, LmTierLabel) match {
+      case Some(rows) => bg.join(broadcast(
+        RelationBridge.localDf(docs.sparkSession, lm.schema, rows)),
+        Seq("bigram"))
+      case None => graft.engine.Spread.byKey(bg, col("bigram"))
         .join(lm, Seq("bigram"))
+    }
     scored
       .groupBy(col("doc_id"))
       .agg(
@@ -662,16 +670,18 @@ object TextAnalysis {
     * the plain unigram count, not the history count — documented
     * simplification; p stays < 1 because sum_b c(ab) <= c(a).)
     *
-    * Shape: the bigram stream is repartitioned by (a, b) up front so
-    * the LM groupBy and the count join-back reuse one exchange (the
-    * `bigramCoverage` layout); the vocab table is checkpointed once and
-    * broadcast into both unigram probes; totals are a broadcast
-    * singleton. At 100 TB the vocab broadcast degrades to a shuffle
-    * join on the token key (Zipf-skewed — AQE skew-split applies) and
-    * the LM table Zipf-truncates like any n-gram LM.
+    * Shape: the `bigramCoverage` layout; the vocab table and the total
+    * join as broadcasts. At 100 TB the vocab broadcast degrades to a
+    * shuffle join on the token key (Zipf-skewed — AQE skew-split
+    * applies) and the LM table Zipf-truncates like any n-gram LM.
     */
   def lmPerplexity(docs: DataFrame,
-                   scriptAware: Boolean = false): DataFrame = {
+                   scriptAware: Boolean = false): DataFrame =
+    lmPerplexity(docs, scriptAware, BroadcastLmRows)
+
+  /** [[lmPerplexity]] with the LM gate as a parameter (law tests). */
+  private[operators] def lmPerplexity(docs: DataFrame, scriptAware: Boolean,
+                                      lmRows: Long): DataFrame = {
     val spark = docs.sparkSession
     val ws = tokens(col("text"), scriptAware)
     // narrow bigram stream + broadcast-or-exchange LM join-back — the
@@ -684,40 +694,36 @@ object TextAnalysis {
       .groupBy(col("tokw")).agg(count(lit(1)).as("cu"))
     val lm = pairs.groupBy(col("a"), col("b")).agg(count(lit(1)).as("cab"))
       .localCheckpoint(true)
-    // Broadcast regime: the joins below collect the vocab-bounded LM
-    // and unigram tables to the driver ANYWAY (that is what a broadcast
-    // build is); collecting each ONCE and deriving the total and both
-    // probe sides on the driver removes the per-summary checkpoint
-    // rescan jobs and the separate total job. Exact integer sums —
-    // bit-identical to the distributed aggregates (TextAnalysisSpec
-    // pins the outputs); schemas are taken from the distributed
-    // expressions verbatim. Past the gate the shape is unchanged.
-    val (scored, uniA, uniB, tot) =
-      if (lm.count() <= BroadcastLmRows) {
-        import org.apache.spark.sql.graftbridge.RelationBridge
+    // Broadcast regime: a broadcast build pulls the vocab-bounded LM and
+    // unigram tables to the driver anyway; collecting each ONCE (the
+    // LM's collect is the gate) and deriving the total and both probes
+    // on the driver as exact integer sums removes the rescan and total
+    // jobs. Schemas come from the distributed expressions verbatim;
+    // TextAnalysisSpec pins equal rows. Past the gate it is unchanged.
+    val (scored, uniA, uniB, tot) = DriverTier.collect(lm, lmRows,
+        LmTierLabel) match {
+      case Some(rows) =>
         val uniRows = RelationBridge.collectInternal(uniPlan)
-        var t = 0L
-        uniRows.foreach(r => t += r.getLong(1))
+        val t = uniRows.iterator.map(_.getLong(1)).sum
         val uniL = RelationBridge.localDf(spark, uniPlan.schema, uniRows)
         val totL = RelationBridge.localDf(spark,
           uniPlan.agg(sum(col("cu")).as("t")).schema,
           Seq(new org.apache.spark.sql.catalyst.expressions
             .GenericInternalRow(Array[Any](
               if (uniRows.isEmpty) null else t))))
-        val lmL = RelationBridge.localDf(spark, lm.schema,
-          RelationBridge.collectInternal(lm))
+        val lmL = RelationBridge.localDf(spark, lm.schema, rows)
         (pairs.join(broadcast(lmL), Seq("a", "b")),
           uniL.select(col("tokw").as("a"), col("cu").as("ca")),
           uniL.select(col("tokw").as("b"), col("cu").as("cb")),
           totL)
-      } else {
+      case None =>
         val uni = uniPlan.localCheckpoint(true) // feeds total + probes
         (graft.engine.Spread.byKey(pairs, col("a"), col("b"))
           .join(lm, Seq("a", "b")),
           uni.select(col("tokw").as("a"), col("cu").as("ca")),
           uni.select(col("tokw").as("b"), col("cu").as("cb")),
           uni.agg(sum(col("cu")).as("t")))
-      }
+    }
     scored
       .join(broadcast(uniA), Seq("a"))
       .join(broadcast(uniB), Seq("b"))
@@ -753,13 +759,17 @@ object TextAnalysis {
     * so c(ab) ≥ 1 > D and p ∈ (0,1)), quantized to integer micro-nats
     * before the order-free per-doc integer fold.
     *
-    * Shape: the bigram stream repartitions ONCE on (a, b); the LM table
-    * is checkpointed and feeds all three summaries (history counts +
-    * right-types, left-types, total types) without rescanning the
-    * corpus; summaries return via broadcast. Same Zipf notes as JM.
+    * Shape: the `bigramCoverage` layout; the checkpointed LM feeds all
+    * three summaries (history counts + right-types, left-types, total
+    * types), which join as broadcasts. Same Zipf notes as JM.
     */
   def knPerplexity(docs: DataFrame,
-                   scriptAware: Boolean = false): DataFrame = {
+                   scriptAware: Boolean = false): DataFrame =
+    knPerplexity(docs, scriptAware, BroadcastLmRows)
+
+  /** [[knPerplexity]] with the LM gate as a parameter (law tests). */
+  private[operators] def knPerplexity(docs: DataFrame, scriptAware: Boolean,
+                                      lmRows: Long): DataFrame = {
     val ws = tokens(col("text"), scriptAware)
     // narrow bigram stream + broadcast-or-exchange LM join-back — the
     // bigramCoverage shape (see its comment for the measured basis)
@@ -775,18 +785,14 @@ object TextAnalysis {
     def contOf(l: DataFrame) = l.groupBy(col("b"))
       .agg(count(lit(1)).as("n1p_b"))
     def typesOf(l: DataFrame) = l.agg(count(lit(1)).as("n_types"))
-    // Broadcast regime: one collect of the checkpointed LM (the exact
-    // rows the broadcast build would pull to the driver anyway) feeds
-    // the join side AND all three summaries as driver-side exact
-    // integer folds — the three checkpoint-rescan jobs disappear.
-    // Schemas come from the distributed expressions verbatim; the spec
-    // pins output equality. Past the gate the shape is unchanged.
-    val (scored, hist, cont, types) =
-      if (lm.count() <= BroadcastLmRows) {
+    // Broadcast regime, as lmPerplexity: the LM's bounded collect (the
+    // gate) feeds the join side AND all three summaries as driver-side
+    // exact integer folds, so no summary rescans the checkpoint.
+    val (scored, hist, cont, types) = DriverTier.collect(lm, lmRows,
+        LmTierLabel) match {
+      case Some(rows) =>
         import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-        import org.apache.spark.sql.graftbridge.RelationBridge
         import org.apache.spark.unsafe.types.UTF8String
-        val rows = RelationBridge.collectInternal(lm)
         val histM = new java.util.LinkedHashMap[UTF8String, Array[Long]]()
         val contM = new java.util.LinkedHashMap[UTF8String, Long]()
         rows.foreach { r =>
@@ -808,10 +814,10 @@ object TextAnalysis {
           Seq(new GenericInternalRow(Array[Any](rows.length.toLong))))
         val lmL = RelationBridge.localDf(spark, lm.schema, rows)
         (pairs.join(broadcast(lmL), Seq("a", "b")), histL, contL, typesL)
-      } else {
+      case None =>
         (graft.engine.Spread.byKey(pairs, col("a"), col("b"))
           .join(lm, Seq("a", "b")), histOf(lm), contOf(lm), typesOf(lm))
-      }
+    }
     scored
       .join(broadcast(hist), Seq("a"))
       .join(broadcast(cont), Seq("b"))

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.engine.DriverTier
 
 /** Unigram-LM (SentencePiece-style) tokenizer training — the OTHER
   * tokenizer family production LLMs use beside BPE (Kudo 2018,
@@ -93,26 +94,23 @@ object Unigram {
     require(vocabSize > 0 && seedSize >= vocabSize && emIters >= 0,
       s"need 0 < vocabSize <= seedSize, got $vocabSize/$seedSize")
     val wf = Bpe.wordFreq(docs, scriptAware).localCheckpoint(true)
-    // Regime switch (guide §1.2, the PageRank/CC/q_sql_recursive
-    // device): the seed -> EM -> prune loop is vocabulary-bounded by
-    // construction, and at sf0.1 the distributed form's wall clock is
-    // ~95% job-scheduling constants (measured: 0.5 executor-CPU-s
-    // across ALL stages of a 2.1 s q_unigram_fertility run — ~14 jobs
-    // of checkpoints, vocab collects and broadcasts). Under the caps
-    // the word table collects once and the loop runs on the driver —
-    // bit-identical by the UnigramSpec law; the corpus-scale wordFreq
-    // pass above stays distributed in BOTH regimes. Memory bound: the
-    // seed substring map is ≤ 4·chars entries ≈ low hundreds of MB
-    // worst case at the cap; past it the distributed loop is unchanged.
-    val g = wf.agg(count(lit(1)).as("nw"),
-      sum(length(col("word")).cast("long")).as("nc")).head()
-    val nWords = g.getLong(0)
-    val nChars = if (g.isNullAt(1)) 0L else g.getLong(1)
-    if (nWords <= LocalTrainMaxWords && nChars <= LocalTrainMaxChars)
-      trainLocal(docs.sparkSession,
-        wf.collect().map(r => (r.getString(0), r.getLong(1))),
-        vocabSize, seedMaxLen, seedSize, emIters)
-    else trainDistributed(wf, vocabSize, seedMaxLen, seedSize, emIters)
+    // Driver tier (engine.DriverTier): the seed -> EM -> prune loop is
+    // vocabulary-bounded, and at sf0.1 the distributed form is ~95%
+    // job-scheduling constants (~14 jobs, 0.5 executor-CPU-s of a 2.1 s
+    // q_unigram_fertility run). Under the caps (characters in code
+    // points, as `length` counts them) the loop runs on the driver,
+    // bit-identical by the UnigramSpec law; past them it is unchanged.
+    DriverTier.collect(wf, LocalTrainMaxWords,
+        "graft.unigram: driver tier collect")
+      .filter(_.iterator.map(_.getUTF8String(0).numChars().toLong).sum <=
+        LocalTrainMaxChars) match {
+      case Some(rows) =>
+        trainLocal(docs.sparkSession,
+          rows.map(r => (r.getUTF8String(0).toString, r.getLong(1))),
+          vocabSize, seedMaxLen, seedSize, emIters)
+      case None =>
+        trainDistributed(wf, vocabSize, seedMaxLen, seedSize, emIters)
+    }
   }
 
   /** Distinct-word count / total code-point caps under which [[train]]

@@ -65,26 +65,15 @@ object WordPiece {
     val base = Bpe.wordFreq(docs, scriptAware)
       .select(col("word"), col("freq"), split(col("word"), "").as("syms"))
       .localCheckpoint(true)
-    // Regime switch (guide §1.2, the Unigram.train / Bpe.trainMerges
-    // device). The measured case for it is STRONGER here than for BPE:
-    // each iteration reads the vocab three ways (pair counts + both
-    // unit-count join sides), so the loop pays 2 jobs per iteration
-    // (collect + eager checkpoint) over a multi-join plan —
-    // q_wordpiece_encode spent 2.5 s wall on < 0.3 executor-CPU-s, all
-    // of it per-iteration planning/scheduling constants. Under the
-    // caps the base collects once and the loop runs on the driver —
-    // bit-identical by the WordPieceSpec law (exact integer counts,
-    // the Catalyst Log eval for the micro-nat score, UTF-8-binary tie
-    // order, the SAME MergeListFold rewrite kernel). Past the caps the
-    // distributed loop is unchanged.
-    val g = base.agg(count(lit(1)).as("nw"),
-      sum(size(col("syms")).cast("long")).as("ns")).head()
-    val nWords = g.getLong(0)
-    val nSyms = if (g.isNullAt(1)) 0L else g.getLong(1)
-    if (nWords <= Bpe.LocalTrainMaxWords && nSyms <= Bpe.LocalTrainMaxSyms)
-      trainMergesLocal(docs.sparkSession, MergeLoop.collect(base),
-        base.schema, iters)
-    else trainMergesDistributed(docs.sparkSession, base, iters)
+    // Driver tier (MergeLoop), as Bpe.trainMerges: each distributed
+    // iteration pays 2 jobs over a multi-join plan (q_wordpiece_encode
+    // spent 2.5 s wall on < 0.3 executor-CPU-s); bit-identical by the
+    // WordPieceSpec law. Past the caps the distributed loop is unchanged.
+    MergeLoop.collect(base, "graft.wordpiece: driver tier collect") match {
+      case Some(words) =>
+        trainMergesLocal(docs.sparkSession, words, base.schema, iters)
+      case None => trainMergesDistributed(docs.sparkSession, base, iters)
+    }
   }
 
   /** Driver mirror of [[trainMergesDistributed]] — bit-identical by

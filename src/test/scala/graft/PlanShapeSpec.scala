@@ -323,7 +323,7 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("curation pipeline over a 1,000-doc parquet corpus with exact " +
-       "duplicates: at most 4 jobs, none after the dedup stage's " +
+       "duplicates: at most 3 jobs, none after the dedup stage's " +
        "driver-tier collect, none when the output is collected") {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
@@ -377,9 +377,9 @@ class PlanShapeSpec extends SparkSpec {
       out.select("doc_id").collect().map(_.getLong(0)))
     assert(ids.nonEmpty && ids.distinct.length == ids.length)
     // the last job is the dedup stage's (AQE's exchange jobs carry its
-    // label too; the parquet schema probe runs before it): the stages
-    // after it fold onto the local relation, and collecting runs nothing
-    assert(staged.size <= 4, staged)
+    // label too; the parquet read infers no schema): the stages after it
+    // fold onto the local relation, and collecting runs nothing
+    assert(staged.size <= 3, staged)
     assert(staged.lastOption.contains("graft.dedup: driver tier collect"),
       staged)
     assert(collected.isEmpty, collected)

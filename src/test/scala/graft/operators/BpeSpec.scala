@@ -169,7 +169,7 @@ class BpeSpec extends SparkSpec {
           split(col("word"), "").as("syms"))
         .localCheckpoint(true)
       val (mD, sD) = Bpe.trainMergesDistributed(spark, base, iters)
-      val (mL, sL) = Bpe.trainMergesLocal(spark, MergeLoop.collect(base),
+      val (mL, sL) = Bpe.trainMergesLocal(spark, MergeLoop.collect(base, "law").get,
         base.schema, iters)
       assert(mL.schema == mD.schema && sL.schema == sD.schema,
         s"schema drift corpus=$ci")

@@ -319,6 +319,26 @@ class TextAnalysisSpec extends SparkSpec {
     }
   }
 
+  test("LM sites: the broadcast and the exchange regimes return equal " +
+       "rows (gate forced each way)") {
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.orderBy(df.columns.map(col): _*).collect().toSeq
+    val corpora = Seq(
+      Seq((1L, "a b c"), (2L, "x a b"), (3L, "a b")).toDF("doc_id", "text"),
+      (Seq((0L, "a b")) ++ (1L to 5L).map(i => (i, "the cat sat")) ++
+        Seq((6L, "cat the sat"))).toDF("doc_id", "text"),
+      Seq((0L, "a b a c"), (1L, "b a b")).toDF("doc_id", "text"),
+      spark.read.parquet(sf() + "/documents.parquet"))
+    for ((docs, i) <- corpora.zipWithIndex; lm <- Seq(0L, 1L)) {
+      assert(rows(TextAnalysis.bigramCoverage(docs, 3L, Long.MaxValue)) ==
+        rows(TextAnalysis.bigramCoverage(docs, 3L, lm)), s"coverage $i")
+      assert(rows(TextAnalysis.lmPerplexity(docs, false, Long.MaxValue)) ==
+        rows(TextAnalysis.lmPerplexity(docs, false, lm)), s"jm $i")
+      assert(rows(TextAnalysis.knPerplexity(docs, false, Long.MaxValue)) ==
+        rows(TextAnalysis.knPerplexity(docs, false, lm)), s"kn $i")
+    }
+  }
+
   test("bm25Diversified: lambda=1 is plain BM25 rank order; the overlap " +
        "penalty breaks a planted near-copy run at rank 2; partition-" +
        "invariant") {

@@ -151,7 +151,7 @@ class WordPieceSpec extends SparkSpec {
         .localCheckpoint(true)
       val (mD, sD) = WordPiece.trainMergesDistributed(spark, base, iters)
       val (mL, sL) = WordPiece.trainMergesLocal(spark,
-        MergeLoop.collect(base), base.schema, iters)
+        MergeLoop.collect(base, "law").get, base.schema, iters)
       assert(mL.schema == mD.schema && sL.schema == sD.schema,
         s"schema drift corpus=$ci")
       assert(mL.orderBy("iter").collect().toSeq ==
